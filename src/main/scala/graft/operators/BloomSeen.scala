@@ -179,7 +179,9 @@ object BloomSeen {
     * Tier 2 (exact): the "possibly seen" residue — ~fpp of the new rows plus
     * all true duplicates — is anti-joined against `seen_exact(url_hash, …)`.
     * Result is exactly `candidates ∖ seen` for either probe shape (bloom has
-    * no false negatives; parity pinned in BloomSeenSpec).
+    * no false negatives; parity pinned in BloomSeenSpec). An empty shard
+    * table (a fresh run) goes through the same probe, which flags every
+    * candidate definitely-new, so no per-batch emptiness probe job runs.
     *
     * Returns (result, cachedFrames): the bucketed probe's flagged frame is
     * CACHED — both the definitely-new and residue branches read it, and an
@@ -193,7 +195,7 @@ object BloomSeen {
       seenShards: Option[DataFrame],
       broadcastProbe: Boolean = false): (DataFrame, Seq[DataFrame]) = {
     seenShards match {
-      case Some(shards) if !shards.isEmpty =>
+      case Some(shards) =>
         val (flagged, cached) =
           if (broadcastProbe)
             // map-side scalar probe — cheap to evaluate per branch, no cache
@@ -208,7 +210,7 @@ object BloomSeen {
           .drop("__maybe_seen")
           .join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti")
         (definitelyNew.unionByName(residue), cached)
-      case _ =>
+      case None =>
         (candidates.join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti"), Nil)
     }
   }

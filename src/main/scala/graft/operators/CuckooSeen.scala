@@ -288,7 +288,7 @@ object CuckooSeen {
       seenExact: DataFrame,
       seenShards: Option[DataFrame]): (DataFrame, Seq[DataFrame]) = {
     seenShards match {
-      case Some(shards) if !shards.isEmpty =>
+      case Some(shards) =>
         val flagged = tagMaybeSeenBucketed(candidates, shards).cache()
         val definitelyNew = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen")
         val residue = flagged
@@ -296,7 +296,7 @@ object CuckooSeen {
           .drop("__maybe_seen")
           .join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti")
         (definitelyNew.unionByName(residue), Seq(flagged))
-      case _ =>
+      case None =>
         (candidates.join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti"), Nil)
     }
   }

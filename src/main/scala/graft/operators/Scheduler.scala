@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Canonicalize, Constants, Parsers, Priority}
+import graft.core.{Canonicalize, Constants, Parsers, Priority, SessionConf}
 
 /** Crawl-loop tuning knobs. All values deterministic; nothing reads clocks. */
 final case class CrawlConfig(
@@ -15,7 +15,9 @@ final case class CrawlConfig(
     /** Multiplier on per-host politeness budgets (bench uses >1 so the
       * measured quantity is pipeline throughput, not loop overhead). */
     budgetScale: Int = 1,
-    /** Number of host buckets == shuffle width of the scheduling stage.
+    /** Number of host buckets. Also the shuffle width of the rank and
+      * salted-parse repartitions above [[Scheduler.BroadcastFetchBound]];
+      * at or below it AQE sizes those from the data (see runBatch).
       * Outputs are invariant to it (rank key is (host_bucket, host)). */
     numBuckets: Int = 32,
     /** Two-tier bloom dedup (true) vs exact-only anti-join (false); final
@@ -115,6 +117,12 @@ final case class BatchResult(
   *  - Per-host budgets are enforced pre-salt (per-host-global), salting is
   *    applied only to the post-budget fetch/parse stage where per-host
   *    grouping no longer matters (SURVEY.md §4 skew note).
+  *  - Shuffle widths: above the bound the rank and salted-parse
+  *    repartitions are pinned at `numBuckets`. At or below it the batch is
+  *    small enough that a fixed width is mostly per-task overhead, paid
+  *    again by every state write that re-reads a cached frame, so the
+  *    batch leaves both repartitions and all its caches to AQE's
+  *    data-sized coalescing (runBatch).
   */
 object Scheduler {
 
@@ -128,6 +136,11 @@ object Scheduler {
     * output-identical (CrawlParitySpec pins parity; PlanShapeSpec pins the
     * plan shapes on both sides of the bound). */
   val BroadcastFetchBound: Long = 50000L
+
+  /** Spark's switch that lets AQE coalesce a cached plan's final stage
+    * (off by default in 4.1); runBatch scopes it around its caches. */
+  private[graft] val CoalesceCachedPlansKey =
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
   private val extractUdf = udf((host: String, html: Array[Byte]) => Parsers.extract(host, html))
   private val linksUdf = udf((html: Array[Byte]) => Parsers.extractLinks(html))
@@ -299,7 +312,8 @@ object Scheduler {
       weights: DataFrame,
       budgets: DataFrame,
       cfg: CrawlConfig,
-      distHostRank: Boolean = false): ScheduleOut = {
+      distHostRank: Boolean = false,
+      fixedWidth: Boolean = true): ScheduleOut = {
     // Cache the tagged candidate set: both the excluded split and the
     // ranking path read it.
     val tagged = Robots.tag(cands, robots).cache()
@@ -318,7 +332,8 @@ object Scheduler {
     // Cache the ranked stage: scheduled, deferred, and the downstream state
     // writes all read it — without the cache each consumer would re-run the
     // whole candidate+dedup+rank pipeline (one full pass per output).
-    val ranked = rankCandidates(allowed, weights, budgets, cfg, delays, distHostRank).cache()
+    val ranked = rankCandidates(allowed, weights, budgets, cfg, delays, distHostRank,
+      fixedWidth).cache()
 
     ScheduleOut(
       ranked.filter(col("host_rank") <= col("budget"))
@@ -329,14 +344,17 @@ object Scheduler {
   }
 
   /** The priority/politeness ranking pipeline (uncached — plan-shape tests
-    * inspect its exchanges directly). */
+    * inspect its exchanges directly). `fixedWidth = false` leaves the width
+    * of the rank window's repartition to spark.sql.shuffle.partitions and
+    * AQE coalescing instead of pinning it at `cfg.numBuckets`. */
   private[graft] def rankCandidates(
       allowed: DataFrame,
       weights: DataFrame,
       budgets: DataFrame,
       cfg: CrawlConfig,
       delays: Option[DataFrame] = None,
-      distHostRank: Boolean = false): DataFrame = {
+      distHostRank: Boolean = false,
+      fixedWidth: Boolean = true): DataFrame = {
     val budgeted = allowed
       .join(broadcast(weights), Seq("host"), "left")
       .withColumn("weight", coalesce(col("weight"), lit(1.0)))
@@ -416,9 +434,10 @@ object Scheduler {
       val rankWindow = Window
         .partitionBy(col("host_bucket"), col("host"))
         .orderBy(rankOrder: _*)
-      preFiltered
-        .repartition(cfg.numBuckets, col("host_bucket"))
-        .withColumn("host_rank", row_number().over(rankWindow))
+      val byBucket =
+        if (fixedWidth) preFiltered.repartition(cfg.numBuckets, col("host_bucket"))
+        else preFiltered.repartition(col("host_bucket"))
+      byBucket.withColumn("host_rank", row_number().over(rankWindow))
     }
   }
 
@@ -429,7 +448,19 @@ object Scheduler {
     * computed once per run) — picks the fetch_order strategy without a
     * per-batch counting action. Returns the batch outputs as LAZY frames:
     * the batch issues NO Spark action itself; the caller's checkpoint
-    * writes are the single job wave. */
+    * writes are the single job wave.
+    *
+    * Partition widths at or below [[BroadcastFetchBound]]: the caches are
+    * re-read by every state write, one job per writer at the cached
+    * frame's width, so the batch lets AQE size them. The rank and
+    * salted-parse repartitions drop their explicit `numBuckets` count
+    * (an explicit count is never coalesced), and the caches are registered
+    * with spark.sql.optimizer.canChangeCachedPlanOutputPartitioning set,
+    * without which a cached plan's final stage is never coalesced. The
+    * setting is read only when `.cache()` registers a frame, so it is
+    * scoped to those calls and the caller's value is restored. Above the
+    * bound both stay pinned: coalescing a mega-batch would undo the salted
+    * parse's skew balance (SkewSpec). */
   def runBatch(
       spark: SparkSession,
       pages: DataFrame,
@@ -447,6 +478,10 @@ object Scheduler {
 
     val loSec = Constants.EPOCH.getEpochSecond + (batchId - 1) * cfg.deltaPerBatchSec
     val hiSec = loSec + cfg.deltaPerBatchSec
+    val broadcastFetch = scheduledBound <= BroadcastFetchBound
+    def registerCaches[A](body: => A): A =
+      if (broadcastFetch) SessionConf.withConf(spark, CoalesceCachedPlansKey, "true")(body)
+      else body
 
     // ---- candidates = Δ-scan ∪ frontier, deduped by canonical url --------
     val cands = deltaScan(pages, loSec, hiSec)
@@ -456,16 +491,18 @@ object Scheduler {
       .withColumn("url_hash", Canonicalize.urlHash(col("url")))
 
     // ---- two-tier seen-set anti-join (op 12) ------------------------------
-    val (newRows, dedupCached) =
+    val (newRows, dedupCached) = registerCaches {
       if (cfg.cuckooSeen)
         CuckooSeen.antiJoinSeen(spark, cands, seenExact,
           if (cfg.useBloom) Some(seenShards) else None)
       else
         BloomSeen.antiJoinSeen(spark, cands, seenExact,
           if (cfg.useBloom) Some(seenShards) else None, cfg.bloomBroadcastProbe)
+    }
 
     // ---- robots + priority + politeness ranking (ops 13/49/38/51/24/25) ---
-    val sched = schedule(newRows, robots, weights, budgets, cfg, distHostRank)
+    val sched = registerCaches(
+      schedule(newRows, robots, weights, budgets, cfg, distHostRank, fixedWidth = !broadcastFetch))
     val excluded = sched.excluded
     val scheduled = sched.scheduled
       .select("url", "url_hash", "host", "discovered_ts", "priority", "host_bucket")
@@ -491,7 +528,6 @@ object Scheduler {
     //    parsed — never the corpus.
     // Both shapes produce byte-identical output (CrawlParitySpec
     // fetch-strategy invariance).
-    val broadcastFetch = scheduledBound <= BroadcastFetchBound
     def fetchSide(df: DataFrame): DataFrame = if (broadcastFetch) broadcast(df) else df
     val hiTs = lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(hiSec)))
     val pagesVisible = pages
@@ -525,15 +561,17 @@ object Scheduler {
     // With the broadcast fetch the scan partitions are already block-
     // balanced; the salted repartition remains available for sources whose
     // block layout is skewed.
+    val salt = pmod(xxhash64(col("url")), lit(cfg.numBuckets))
     val balanced =
-      if (cfg.saltParse) fetched0.repartition(cfg.numBuckets, pmod(xxhash64(col("url")), lit(cfg.numBuckets)))
-      else fetched0
-    val parsed = balanced
+      if (!cfg.saltParse) fetched0
+      else if (broadcastFetch) fetched0.repartition(salt)
+      else fetched0.repartition(cfg.numBuckets, salt)
+    val parsed = registerCaches(balanced
       .withColumn("bytes", octet_length(col("html")))
       .withColumn("extracted", extractUdf(col("host"), col("html")))
       .withColumn("parse_ok", col("extracted") === col("text"))
       .withColumn("is_listing", col("extracted") === lit(""))
-      .cache()
+      .cache())
 
     // ---- link extraction (op 48): listing pages grow the frontier ---------
     val links = parsed

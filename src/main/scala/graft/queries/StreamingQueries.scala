@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.{Constants, Fixtures}
+import graft.core.{Constants, Fixtures, SessionConf}
 import graft.streaming.StreamingIngest
 
 /** Driver-gated entries for the Structured Streaming flavors (SURVEY.md §2
@@ -78,8 +78,7 @@ object StreamingQueries {
     * sf0.1, ~1.7 s of fixed trigger overhead each, 3×147 s of bench wall
     * and the single largest cause of the r5 driver-bench timeout). The
     * grouping below folds CONSECUTIVE hours into ≤ this many batches. */
-  private val PagesFeedBatches: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_BATCHES").map(_.toInt).getOrElse(8)
+  private lazy val PagesFeedBatches: Int = positiveIntEnv("SPARK_GRAFT_STREAM_BATCHES", 8)
 
   /** The pages feed split into ≤ [[PagesFeedBatches]] micro-batches of
     * CONSECUTIVE capture hours (r6). Contiguity is what keeps the regroup
@@ -131,22 +130,22 @@ object StreamingQueries {
     * state-partition size via this env, NOT to the core count. Results are
     * partition-count-invariant (set semantics; per-key state transitions
     * don't cross partitions), pinned by the unchanged DuckDB oracles. */
-  private val StreamPartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(8)
+  private lazy val StreamPartitions: Int = positiveIntEnv("SPARK_GRAFT_STREAM_PARTITIONS", 8)
 
-  /** Run `body` with the stream-scoped shuffle-partition override, restoring
-    * the session value afterwards (entries run sequentially in Verify/
-    * Bench, so a save/set/restore around the drain is race-free). */
-  private def withStreamConf[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key, StreamPartitions.toString)
-    try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+  /** Integer override `name` from `env`, or `default` when absent; a
+    * non-numeric or non-positive value fails naming the variable. */
+  private[graft] def positiveIntEnv(name: String, default: Int,
+      env: Map[String, String] = sys.env): Int =
+    env.get(name) match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
     }
-  }
+
+  /** Run `body` with the stream-scoped shuffle-partition override (entries
+    * run sequentially in Verify/Bench, so the scoped override is race-free). */
+  private def withStreamConf[A](s: SparkSession)(body: => A): A =
+    SessionConf.withConf(s, "spark.sql.shuffle.partitions", StreamPartitions.toString)(body)
 
   /** Drain a stream into a fresh named memory sink and return the table. */
   private def drained(s: SparkSession, df: DataFrame, name: String,

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Canonicalize, Constants, Fixtures}
-import graft.operators.{CrawlConfig, Scheduler}
+import graft.operators.{BatchResult, Checkpoints, CrawlConfig, CrawlLoop, Scheduler}
 
 /** Physical-plan shape pins (SURVEY.md §4): these are the load-bearing
   * optimizer facts the 100 TB design relies on. If a Spark upgrade or a
@@ -29,6 +30,32 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def scans(df: DataFrame): Seq[FileSourceScanExec] =
     df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+
+  /** One whole-corpus sf0.001 batch (salted parse on, exact seen tier). */
+  private val batchCfg = CrawlConfig(deltaPerBatchSec = 365L * 24 * 3600,
+    useBloom = false, runTag = "planshape_width")
+
+  private def sf0001Batch(scheduledBound: Long, robotsDrop: Seq[String] = Nil): BatchResult = {
+    val fixDir = Fixtures.ensure(spark, TestSpark.Sf0001)
+    val pages = spark.read.parquet(s"$fixDir/pages.parquet")
+    val robots = spark.read.parquet(s"$fixDir/robots.parquet").drop(robotsDrop: _*)
+    val weights = spark.read.parquet(s"$fixDir/source_weights.parquet")
+    val budgets = spark.read.parquet(s"$fixDir/budgets.parquet")
+    Scheduler.runBatch(spark, pages, CrawlLoop.seedFrontier(spark, fixDir),
+      Checkpoints.emptyFrame(spark, CrawlLoop.SeenSchema),
+      Checkpoints.emptyFrame(spark, CrawlLoop.ShardSchema),
+      robots, weights, budgets, 1L, 0L, batchCfg, scheduledBound = scheduledBound)
+  }
+
+  /** The batch's cached frame carrying `column`: host_rank → ranked,
+    * parse_ok → parsed. */
+  private def cachedWith(r: BatchResult, column: String): InMemoryRelation =
+    r.cached.filter(_.columns.contains(column)) match {
+      case Seq(df) => df.queryExecution.withCachedData.collectFirst {
+        case m: InMemoryRelation => m
+      }.getOrElse(fail(s"frame with $column is not cached"))
+      case other => fail(s"${other.size} cached frames carry $column")
+    }
 
   test("delta-scan: html pruned from the scan, warc_ts predicate pushed down") {
     withStaticPlans {
@@ -147,6 +174,50 @@ class PlanShapeSpec extends AnyFunSuite {
           s"text rides a sorted (range) exchange:\n$plan")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
+  }
+
+  test("politeness-bounded batch: AQE sizes the rank and parse caches below numBuckets") {
+    // AQE stays on here: the widths under test are AQE's coalescing.
+    val r = sf0001Batch(scheduledBound = 1000L)
+    try {
+      r.articles.count()
+      val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      for (c <- Seq("host_rank", "parse_ok")) {
+        val width = cachedWith(r, c).cacheBuilder.cachedColumnBuffers.getNumPartitions
+        // Below the session width too: the cached plan's final stage coalesced.
+        assert(width < batchCfg.numBuckets && width < shufflePartitions,
+          s"cache with $c is $width partitions wide")
+      }
+    } finally r.cached.foreach(_.unpersist())
+  }
+
+  test("above BroadcastFetchBound: rank and parse repartitions stay pinned at numBuckets") {
+    withStaticPlans {
+      val r = sf0001Batch(scheduledBound = Scheduler.BroadcastFetchBound + 1)
+      try for (c <- Seq("host_rank", "parse_ok")) {
+        val plan = cachedWith(r, c).cacheBuilder.cachedPlan
+        val pinned = plan.collect {
+          case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM &&
+            e.outputPartitioning.numPartitions == batchCfg.numBuckets => e
+        }
+        assert(pinned.size === 1, s"cache with $c:\n$plan")
+      } finally r.cached.foreach(_.unpersist())
+    }
+  }
+
+  test("runBatch restores the caller's cached-plan partitioning setting") {
+    val key = Scheduler.CoalesceCachedPlansKey
+    def state = spark.conf.getAll.get(key)
+    val prev = state
+    try for (start <- Seq(None, Some("false"))) {
+      start.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      sf0001Batch(scheduledBound = 1000L).cached.foreach(_.unpersist())
+      assert(state === start, "after a batch that returned")
+      // A robots dim without `disallow` fails while the batch registers its caches.
+      intercept[org.apache.spark.sql.AnalysisException](
+        sf0001Batch(scheduledBound = 1000L, robotsDrop = Seq("disallow")))
+      assert(state === start, "after a batch that threw")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("distributed host rank: no window operator, no single-task rank stage") {

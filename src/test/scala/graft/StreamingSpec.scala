@@ -369,4 +369,15 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(finalSeen === exp)
   }
+
+  test("stream env overrides: absent → default; non-numeric or non-positive → error naming the variable") {
+    import graft.queries.StreamingQueries.positiveIntEnv
+    val name = "SPARK_GRAFT_STREAM_PARTITIONS"
+    assert(positiveIntEnv(name, 8, Map.empty) === 8)
+    assert(positiveIntEnv(name, 8, Map(name -> " 3 ")) === 3)
+    for (bad <- Seq("", "abc", "2.5", "0", "-4", "99999999999")) {
+      val e = intercept[IllegalArgumentException](positiveIntEnv(name, 8, Map(name -> bad)))
+      assert(e.getMessage.contains(name), s"'$bad': ${e.getMessage}")
+    }
+  }
 }
