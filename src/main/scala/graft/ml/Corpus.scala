@@ -80,12 +80,6 @@ object Corpus {
       r
     }
 
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** See object doc. `checkpointDir = None` (default) truncates per-round
     * lineage with memory-backed `localCheckpoint` — fastest, and fine in
     * local mode or for jobs short enough to simply re-run, but NOT
@@ -109,7 +103,7 @@ object Corpus {
     }
     def releaseRound(df: DataFrame, name: String): Unit = checkpointDir match {
       case Some(root) => graft.operators.Checkpoints.deleteRecursively(s"$root/$name")
-      case None => freeCheckpoint(df)
+      case None => Rounds.free(df)
     }
     val e = edges.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
     // Symmetric closure once; propagation then only needs one direction.
@@ -155,7 +149,7 @@ object Corpus {
       // storage mode the dirs are left for crash forensics/recovery — the
       // caller owns the directory.)
       case t: Throwable =>
-        if (checkpointDir.isEmpty) { freeCheckpoint(sym); freeCheckpoint(labels) }
+        if (checkpointDir.isEmpty) { Rounds.free(sym); Rounds.free(labels) }
         throw t
     }
     releaseRound(sym, "sym") // only the final label table is consumed downstream

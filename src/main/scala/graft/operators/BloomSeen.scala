@@ -24,6 +24,13 @@ import graft.core.Constants
   * is byte-identical to the exact-only anti-join (parity test in
   * BloomSeenSpec).
   *
+  * What the filter covers in the crawl: the compacted seen base only —
+  * `Checkpoints.compactSeen` builds the shard table from the compacted
+  * rows, and the deltas committed after that compaction are anti-joined
+  * exactly before this probe runs (`Scheduler.runBatch`'s `seenRecent`;
+  * CrawlLoop state layout). `mergeShards` is kept for callers that fold
+  * deltas into one table themselves.
+  *
   * Blob-handling note — two probe shapes, both avoiding the fatal one (a
   * plain join that attaches the multi-MB blob to every candidate row):
   *

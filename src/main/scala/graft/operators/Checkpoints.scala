@@ -86,20 +86,36 @@ object Checkpoints {
       articlesDelta: DataFrame,
       fetchLogDelta: DataFrame,
       hostLogDelta: DataFrame,
-      compact: Boolean = true): Unit = {
+      compact: Boolean = true): Unit =
+    writeState(spark, dir, k, frontier, seenDelta, Some(seenShards),
+      articlesDelta, fetchLogDelta, hostLogDelta, compact)
+
+  /** Same, with the `snap=k/seen_shards` snapshot optional. CrawlLoop
+    * writes none: its filter is built at seen compaction ([[compactSeen]]). */
+  def writeState(
+      spark: SparkSession,
+      dir: String,
+      k: Long,
+      frontier: DataFrame,
+      seenDelta: DataFrame,
+      seenShards: Option[DataFrame],
+      articlesDelta: DataFrame,
+      fetchLogDelta: DataFrame,
+      hostLogDelta: DataFrame,
+      compact: Boolean): Unit = {
     val snap = snapDir(dir, k)
-    // The six pre-manifest writes are independent — submit them as
+    // The pre-manifest writes are independent — submit them as
     // concurrent Spark jobs.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val writes = Seq(
       () => write(frontier, s"$snap/frontier", compact),
-      () => write(seenShards, s"$snap/seen_shards", compact = true),
       () => write(seenDelta, s"$dir/seen/b$k", compact),
       () => write(articlesDelta, s"$dir/articles/b$k", compact),
       () => write(fetchLogDelta, s"$dir/fetch_log/b$k", compact),
-      () => write(hostLogDelta, s"$dir/host_log/b$k", compact = true))
+      () => write(hostLogDelta, s"$dir/host_log/b$k", compact = true)) ++
+      seenShards.map(sh => () => write(sh, s"$snap/seen_shards", compact = true))
     Await.result(Future.sequence(writes.map(w => Future(w()))), Duration.Inf)
   }
 
@@ -160,6 +176,11 @@ object Checkpoints {
   def readSnap(spark: SparkSession, dir: String, k: Long, name: String): DataFrame =
     spark.read.parquet(s"${snapDir(dir, k)}/$name")
 
+  /** The parquet table at `path`, or None when no write of it committed
+    * (no `_SUCCESS` marker): absent, torn, or from an older state layout. */
+  def readCommitted(spark: SparkSession, path: String): Option[DataFrame] =
+    if (Files.exists(Paths.get(path, "_SUCCESS"))) Some(spark.read.parquet(path)) else None
+
   /** Union of all committed per-batch appends under `dir/<table>/b*`. */
   def readAppends(spark: SparkSession, dir: String, table: String, upTo: Long): DataFrame = {
     val paths = (1L to upTo).map(k => s"$dir/$table/b$k")
@@ -179,46 +200,85 @@ object Checkpoints {
   // the compaction overwrites it. Readers pinned at upTo ∈ [k-K, k)
   // (e.g. the rerun of a killed batch) still resolve: the PREVIOUS
   // compaction and the last K deltas are always retained.
+  //
+  // A compaction may carry the seen-set shard table that summarizes it,
+  // `seen_compact_shards/c<k>`, written BEFORE the rows: a visible
+  // compaction therefore never lacks the table it was built with. Tables
+  // are optional — compactions from before they existed, or from runs with
+  // the filter tier off (`useBloom = false`), have none.
   // ------------------------------------------------------------------
 
-  private def compactionIds(dir: String): Seq[Long] = {
-    val cp = Paths.get(dir, "seen_compact")
+  def compactDir(dir: String, j: Long): String = s"$dir/seen_compact/c$j"
+
+  def compactShardsDir(dir: String, j: Long): String = s"$dir/seen_compact_shards/c$j"
+
+  /** Ids j of every `c<j>` entry under `dir/<table>`, committed or not. */
+  private def listCompactions(dir: String, table: String): Seq[Long] = {
+    val cp = Paths.get(dir, table)
     if (!Files.isDirectory(cp)) return Nil
     scala.util.Using.resource(Files.list(cp)) { stream =>
       stream.iterator().asScala
         .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("c") && Files.exists(Paths.get(dir, "seen_compact", s, "_SUCCESS")) =>
-          s.stripPrefix("c").toLong }
+        .flatMap(s => if (s.startsWith("c")) s.drop(1).toLongOption else None)
         .toSeq
     }
   }
 
-  /** Effective seen rows up to batch `upTo`: the newest committed
-    * compaction at or below `upTo`, plus the deltas after it. Falls back to
+  private def compactionIds(dir: String): Seq[Long] =
+    listCompactions(dir, "seen_compact")
+      .filter(j => Files.exists(Paths.get(compactDir(dir, j), "_SUCCESS")))
+
+  /** The newest committed compaction at or below batch `upTo`: the base
+    * of the effective seen set there. */
+  def seenBase(dir: String, upTo: Long): Option[Long] =
+    compactionIds(dir).filter(_ <= upTo).maxOption
+
+  private def deltaPaths(dir: String, base: Option[Long], upTo: Long): Seq[String] =
+    (base.fold(1L)(_ + 1) to upTo).map(k => s"$dir/seen/b$k")
+      .filter(p => Files.exists(Paths.get(p)))
+
+  /** Seen deltas committed after compaction `base` up to batch `upTo`, or
+    * None when there are none. */
+  def readSeenRecent(spark: SparkSession, dir: String, base: Long,
+      upTo: Long): Option[DataFrame] = {
+    val paths = deltaPaths(dir, Some(base), upTo)
+    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+  }
+
+  /** Effective seen rows up to batch `upTo`: the base compaction
+    * ([[seenBase]]) plus the deltas after it, in one scan. Falls back to
     * the plain delta union (pre-compaction dirs read unchanged). */
   def readSeen(spark: SparkSession, dir: String, upTo: Long): DataFrame = {
-    val base = compactionIds(dir).filter(_ <= upTo).sorted.lastOption
-    base match {
-      case Some(j) =>
-        val deltas = ((j + 1) to upTo).map(k => s"$dir/seen/b$k")
-          .filter(p => Files.exists(Paths.get(p)))
-        spark.read.parquet(s"$dir/seen_compact/c$j" +: deltas: _*)
-      case None => readAppends(spark, dir, "seen", upTo)
-    }
+    val base = seenBase(dir, upTo)
+    val paths = base.map(compactDir(dir, _)).toSeq ++ deltaPaths(dir, base, upTo)
+    require(paths.nonEmpty, s"no committed appends for seen in $dir")
+    spark.read.parquet(paths: _*)
   }
 
   /** Fold the effective seen set at batch k into `seen_compact/c<k>`, then
     * release deltas (and compactions) no reader can still need: any live
     * reader has upTo ≥ k-1 ≥ k-every, so deltas ≤ k-every (covered by the
-    * PREVIOUS compaction) and compactions < k-every are dead. Call after
-    * commitManifest(k). */
-  def compactSeen(spark: SparkSession, dir: String, k: Long, every: Int): Unit = {
+    * PREVIOUS compaction) and compactions < k-every are dead — rows and
+    * shard tables alike, committed or torn. Call after commitManifest(k).
+    *
+    * With `buildShards`, the shard table summarizing the compacted rows is
+    * built from the same effective frame and committed first. Without it,
+    * any table an earlier run of this compaction left is removed, so a
+    * table never describes rows it was not built from. */
+  def compactSeen(spark: SparkSession, dir: String, k: Long, every: Int,
+      buildShards: Option[DataFrame => DataFrame] = None): Unit = {
     val effective = readSeen(spark, dir, k)
-    effective.write.mode(SaveMode.Overwrite).parquet(s"$dir/seen_compact/c$k")
+    buildShards match {
+      case Some(build) => write(build(effective.select("url_hash")), compactShardsDir(dir, k))
+      case None => deleteRecursively(compactShardsDir(dir, k))
+    }
+    effective.write.mode(SaveMode.Overwrite).parquet(compactDir(dir, k))
     for (i <- 1L to (k - every))
       deleteRecursively(s"$dir/seen/b$i")
-    for (j <- compactionIds(dir) if j < k - every)
-      deleteRecursively(s"$dir/seen_compact/c$j")
+    for (j <- listCompactions(dir, "seen_compact") if j < k - every)
+      deleteRecursively(compactDir(dir, j))
+    for (j <- listCompactions(dir, "seen_compact_shards") if j < k - every)
+      deleteRecursively(compactShardsDir(dir, j))
   }
 
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =

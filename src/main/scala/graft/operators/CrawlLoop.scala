@@ -22,7 +22,14 @@ import graft.core.{Constants, Fixtures}
   *  - `frontier` is a full snapshot per batch (rows leave the frontier when
   *    scheduled/excluded); its size is the discovery-fetch backlog, not the
   *    corpus.
-  *  - `seen_shards` (bloom blobs) is NumShards rows — trivial to rewrite.
+  *  - The seen-set filter (Bloom or cuckoo shard blobs, NumShards rows) is
+  *    built only when the seen set is compacted, as
+  *    `seen_compact_shards/c<j>` beside the compaction it summarizes, as LSM
+  *    stores keep one filter per file. Each batch anti-joins the deltas
+  *    committed since that compaction exactly; no per-batch
+  *    `snap=k/seen_shards` is written (older state's snapshots are ignored).
+  *  - A filter that could miss rows is never trusted: a compaction without
+  *    a table (older state, or a run with the tier off) is probed exactly.
   *
   * Termination: the loop stops when the frontier is empty AND the Δ-scan
   * high-water mark has passed the last page capture (or at cfg.maxBatches).
@@ -78,6 +85,33 @@ object CrawlLoop {
     if (k == 0) Checkpoints.emptyFrame(spark, SeenSchema)
     else Checkpoints.readSeen(spark, dir, k)
 
+  /** The seen inputs of a batch: `runBatch`'s `seenExact`, `seenShards`
+    * and `seenRecent`, plus the batch's config (filter tier off when there
+    * is no table to probe). */
+  private final case class SeenInputs(exact: DataFrame, shards: DataFrame,
+      recent: Option[DataFrame], cfg: CrawlConfig)
+
+  /** Seen inputs of the batch after batch `upTo`. When the newest
+    * compaction carries a shard table, the filter tier probes that
+    * compaction and the deltas after it are anti-joined exactly.
+    * Otherwise — no compaction yet, the tier off, or a compaction without
+    * a table — the whole seen set is anti-joined exactly. */
+  private def seenInputs(spark: SparkSession, dir: String, upTo: Long,
+      cfg: CrawlConfig): SeenInputs = {
+    val base = for {
+      j <- Checkpoints.seenBase(dir, upTo) if cfg.useBloom
+      shards <- Checkpoints.readCommitted(spark, Checkpoints.compactShardsDir(dir, j))
+    } yield (j, shards)
+    base match {
+      case Some((j, shards)) =>
+        SeenInputs(spark.read.parquet(Checkpoints.compactDir(dir, j)), shards,
+          Checkpoints.readSeenRecent(spark, dir, j, upTo), cfg)
+      case None =>
+        SeenInputs(seenUpTo(spark, dir, upTo), Checkpoints.emptyFrame(spark, ShardSchema),
+          None, cfg.copy(useBloom = false))
+    }
+  }
+
   /** Run (or resume) a crawl over the fixtures of `sfDir`; returns the state
     * dir holding articles / seen / fetch_log / host_log / snapshots. */
   def run(spark: SparkSession, sfDir: String, cfg: CrawlConfig,
@@ -123,6 +157,8 @@ object CrawlLoop {
     // parts × hosts rows.
     val distHostRank = scheduledBound > Scheduler.BroadcastFetchBound &&
       hostCount <= DistHostRankMaxHosts
+    val buildShards: DataFrame => DataFrame =
+      if (cfg.cuckooSeen) CuckooSeen.buildShards else BloomSeen.buildShards
 
     // ---- resume point (op 5): max committed manifest ----------------------
     // Running totals are restored from the manifest's cumulative fields so a
@@ -137,26 +173,15 @@ object CrawlLoop {
     var frontier =
       if (k == 0) seedFrontier(spark, fixDir)
       else Checkpoints.readSnap(spark, dir, k, "frontier")
-    var seenShards =
-      if (k == 0) Checkpoints.emptyFrame(spark, ShardSchema)
-      else Checkpoints.readSnap(spark, dir, k, "seen_shards")
 
     var done = false
     while (!done && k < cfg.maxBatches) {
       k += 1
-      val seenExact = seenUpTo(spark, dir, k - 1)
+      val seen = seenInputs(spark, dir, k - 1, cfg)
       val r = timed(s"b$k runBatch")(
-        Scheduler.runBatch(spark, pages, frontier, seenExact, seenShards,
-          robots, weights, budgets, k, articleCount, cfg, scheduledBound,
-          distHostRank))
-
-      val newShards =
-        if (cfg.cuckooSeen)
-          CuckooSeen.mergeShards(seenShards,
-            CuckooSeen.buildShards(r.seenDelta.select("url_hash")))
-        else
-          BloomSeen.mergeShards(seenShards,
-            BloomSeen.buildShards(r.seenDelta.select("url_hash")))
+        Scheduler.runBatch(spark, pages, frontier, seen.exact, seen.shards,
+          robots, weights, budgets, k, articleCount, seen.cfg, scheduledBound,
+          distHostRank, seen.recent))
 
       // Batch counters ride the write jobs as observe() metrics (op 21's
       // mechanism): the fetch_log/host_log write actions collect them as a
@@ -172,7 +197,7 @@ object CrawlLoop {
         sum(col("urls_scheduled")).as("scheduled"))
 
       timed(s"b$k writeState")(Checkpoints.writeState(spark, dir, k,
-        r.frontier, r.seenDelta, newShards,
+        r.frontier, r.seenDelta, None,
         r.articles, fetchLogObserved, hostLogObserved,
         compact = cfg.compactState))
       // The writes are complete, so the observations resolve immediately;
@@ -194,15 +219,16 @@ object CrawlLoop {
       // Post-commit seen compaction (op 5 scale hygiene): bounded file
       // sources per batch read; crash-safe independently of the manifest
       // (a torn compaction is invisible; a killed-then-rerun batch k
-      // re-triggers it and overwrites).
+      // re-triggers it and overwrites). The compaction's shard table is
+      // built here, and only here.
       if (cfg.seenCompactEvery > 0 && k % cfg.seenCompactEvery == 0)
         timed(s"b$k compactSeen")(
-          Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery))
+          Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery,
+            Option.when(cfg.useBloom)(buildShards)))
       r.cached.foreach(_.unpersist())
 
       // Re-read committed state (truncates lineage across batches).
       frontier = Checkpoints.readSnap(spark, dir, k, "frontier")
-      seenShards = Checkpoints.readSnap(spark, dir, k, "seen_shards")
 
       val hwmDone = Constants.EPOCH.getEpochSecond + k * cfg.deltaPerBatchSec > maxTsSec
       done = hwmDone && timed(s"b$k isEmpty")(frontier.isEmpty)

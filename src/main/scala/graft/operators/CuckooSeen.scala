@@ -32,6 +32,10 @@ import graft.core.Constants
   * per-key delete-then-reinsert stays exact (the documented cuckoo caveat
   * about deleting never-inserted keys cannot arise here).
   *
+  * Coverage is BloomSeen's too: in the crawl the table is built at seen
+  * compaction and covers the compacted base, the later deltas being
+  * anti-joined exactly.
+  *
   * Determinism note: CONTAINS results are a pure function of the inserted
   * key multiset (every copy of a fingerprint lives in one of its two
   * buckets), but the byte layout of the table depends on insertion order —

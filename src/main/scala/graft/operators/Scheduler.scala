@@ -21,7 +21,9 @@ final case class CrawlConfig(
       * Outputs are invariant to it (rank key is (host_bucket, host)). */
     numBuckets: Int = 32,
     /** Two-tier bloom dedup (true) vs exact-only anti-join (false); final
-      * sets are identical — the flag exists for the parity test. */
+      * sets are identical — the flag exists for the parity test. A batch
+      * with no shard table to probe runs exact-only either way (CrawlLoop:
+      * batches before the first seen compaction). */
     useBloom: Boolean = true,
     /** Bloom tier-1 probe shape: false (default) = shard-bucketed cogroup —
       * the 10^10-scale shape, no driver collect / monolithic broadcast;
@@ -63,7 +65,10 @@ final case class CrawlConfig(
       * sources instead of O(batches) — the O(k²) cumulative-read leak a
       * 10^10-URL crawl's batch count would otherwise hit. Output-invariant
       * (Checkpoints.compactSeen; parity + resume pinned in
-      * CrawlParitySpec). */
+      * CrawlParitySpec). The cadence also sets when the seen-set shard table
+      * is built: each compaction builds the table that summarizes it, and
+      * until the first one (or with 0) the batches anti-join the seen
+      * deltas exactly (CrawlLoop). */
     seenCompactEvery: Int = 8,
     /** State/checkpoint namespace under Constants.workDir/state/. */
     runTag: String = "default")
@@ -442,13 +447,16 @@ object Scheduler {
   }
 
   /** Run one micro-batch. `frontier`: (url, host, discovered_ts) queued rows;
-    * `seenExact`: (url_hash, url, status); `seenShards`: bloom blobs;
-    * dims: robots/weights/budgets fixtures. `scheduledBound`: a per-run
-    * upper bound on the batch's scheduled count (Σ budgets × budgetScale,
-    * computed once per run) — picks the fetch_order strategy without a
-    * per-batch counting action. Returns the batch outputs as LAZY frames:
-    * the batch issues NO Spark action itself; the caller's checkpoint
-    * writes are the single job wave.
+    * `seenExact`: (url_hash, url, status); `seenShards`: the filter blobs
+    * summarizing `seenExact`; `seenRecent`: seen rows the shard table does
+    * not cover (the deltas after the compaction it summarizes, see
+    * CrawlLoop), anti-joined exactly before the two-tier probe — the seen
+    * set is then `seenRecent ∪ seenExact`; dims: robots/weights/budgets
+    * fixtures. `scheduledBound`: a per-run upper bound on the batch's
+    * scheduled count (Σ budgets × budgetScale, computed once per run) —
+    * picks the fetch_order strategy without a per-batch counting action.
+    * Returns the batch outputs as LAZY frames: the batch issues NO Spark
+    * action itself; the caller's checkpoint writes are the single job wave.
     *
     * Partition widths at or below [[BroadcastFetchBound]]: the caches are
     * re-read by every state write, one job per writer at the cached
@@ -474,7 +482,8 @@ object Scheduler {
       articleCountSoFar: Long,
       cfg: CrawlConfig,
       scheduledBound: Long = Long.MaxValue,
-      distHostRank: Boolean = false): BatchResult = {
+      distHostRank: Boolean = false,
+      seenRecent: Option[DataFrame] = None): BatchResult = {
 
     val loSec = Constants.EPOCH.getEpochSecond + (batchId - 1) * cfg.deltaPerBatchSec
     val hiSec = loSec + cfg.deltaPerBatchSec
@@ -490,13 +499,16 @@ object Scheduler {
       .agg(max("discovered_ts").as("discovered_ts"))
       .withColumn("url_hash", Canonicalize.urlHash(col("url")))
 
-    // ---- two-tier seen-set anti-join (op 12) ------------------------------
+    // ---- seen-set anti-join (op 12): exact vs the recent rows, then ------
+    // ---- two-tier vs the rows the shard table summarizes -----------------
+    val unseenRecent = seenRecent.fold(cands)(recent =>
+      cands.join(recent.select("url_hash"), Seq("url_hash"), "left_anti"))
     val (newRows, dedupCached) = registerCaches {
       if (cfg.cuckooSeen)
-        CuckooSeen.antiJoinSeen(spark, cands, seenExact,
+        CuckooSeen.antiJoinSeen(spark, unseenRecent, seenExact,
           if (cfg.useBloom) Some(seenShards) else None)
       else
-        BloomSeen.antiJoinSeen(spark, cands, seenExact,
+        BloomSeen.antiJoinSeen(spark, unseenRecent, seenExact,
           if (cfg.useBloom) Some(seenShards) else None, cfg.bloomBroadcastProbe)
     }
 

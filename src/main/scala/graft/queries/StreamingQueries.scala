@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -80,6 +80,15 @@ object StreamingQueries {
     * grouping below folds CONSECUTIVE hours into ≤ this many batches. */
   private lazy val PagesFeedBatches: Int = positiveIntEnv("SPARK_GRAFT_STREAM_BATCHES", 8)
 
+  /** First and last capture hour of `pages`; an empty feed or one whose
+    * every `warc_ts` is null has no hour range and fails naming why. */
+  private[graft] def hourRange(pages: DataFrame): (Long, Long) = {
+    val r = pages.agg(min(hourBatch), max(hourBatch)).head()
+    require(!r.isNullAt(0) && !r.isNullAt(1),
+      "pages feed has no capture hours: the pages table is empty or every warc_ts is null")
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** The pages feed split into ≤ [[PagesFeedBatches]] micro-batches of
     * CONSECUTIVE capture hours (r6). Contiguity is what keeps the regroup
     * output-invariant for the watermarked consumers (q170/q171/q172): file
@@ -94,9 +103,7 @@ object StreamingQueries {
     * structure. */
   private def pagesFeed(s: SparkSession, sfDir: String, name: String): DataFrame = {
     val pages = Fixtures.pages(s, sfDir)
-    val Row(h0: Long, h1: Long) = pages
-      .agg(min(hourBatch).as("h0"), max(hourBatch).as("h1"))
-      .head()
+    val (h0, h1) = hourRange(pages)
     val span = h1 - h0 + 1
     val group = (span + PagesFeedBatches - 1) / PagesFeedBatches // hours per batch
     val dir = streamDir(s, sfDir, name,

@@ -4,15 +4,21 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Checkpoints
+import graft.operators.{BloomSeen, Checkpoints, CrawlLoop}
 
 /** Backward compatibility of the checkpoint format (round-2 ADVICE): a
   * pre-upgrade state dir (manifests without the cumulative *_total fields;
   * fetch_log deltas without urls_article) must resume with CORRECT running
-  * totals, not silent zeros, and batchCounts must not fail. */
+  * totals, not silent zeros, and batchCounts must not fail. State written
+  * before compactions carried seen-set shard tables must resume to the
+  * same crawl. */
 class CheckpointCompatSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import CrawlParitySpec.{cfgBase, crawlOutput, hasCompactionShards}
+
+  private lazy val uninterrupted = crawlOutput(spark,
+    CrawlLoop.run(spark, TestSpark.Sf0001, cfgBase.copy(runTag = "compat_full"), fresh = true))
 
   test("readManifest recovers totals from old-format manifests by summing") {
     val dir = Files.createTempDirectory("graft-ckpt-compat").toString
@@ -62,5 +68,41 @@ class CheckpointCompatSpec extends AnyFunSuite {
       .write.parquet(s"$dir/host_log/b2")
     val (s2, f2, p2, a2) = Checkpoints.batchCounts(spark, dir, 2L)
     assert((s2, f2, p2, a2) === ((3L, 3L, 0L, 0L)))
+  }
+
+  test("old layout: a compaction without a shard table resumes to the uninterrupted crawl") {
+    val cfg = cfgBase.copy(runTag = "compat_old_layout", seenCompactEvery = 2)
+    val dir = Checkpoints.stateDir(cfg.runTag)
+    CrawlLoop.run(spark, TestSpark.Sf0001, cfg.copy(maxBatches = 3), fresh = true)
+    // The layout written before compactions carried shard tables: a Bloom
+    // snapshot per batch, and compactions of rows only.
+    Checkpoints.deleteRecursively(s"$dir/seen_compact_shards")
+    for (k <- 1L to 3L)
+      BloomSeen.buildShards(CrawlLoop.seenUpTo(spark, dir, k).select("url_hash"))
+        .write.parquet(s"${Checkpoints.snapDir(dir, k)}/seen_shards")
+    assert(Checkpoints.seenBase(dir, 3L) === Some(2L) && !hasCompactionShards(dir, 2L))
+
+    val resumed = CrawlLoop.run(spark, TestSpark.Sf0001, cfg, fresh = false)
+    assert(crawlOutput(spark, resumed) === uninterrupted)
+    assert(Checkpoints.seenBase(dir, resumed.batches).exists(j => j > 3L && hasCompactionShards(dir, j)),
+      "the newest compaction after the resume has no shard table")
+  }
+
+  test("compactSeen releases old shard tables and torn compactions, committed or not") {
+    val dir = Files.createTempDirectory("graft-compact-gc").toString
+    for (k <- 1L to 4L)
+      Seq((k, s"https://h.example.com/$k", "fetched")).toDF("url_hash", "url", "status")
+        .write.parquet(s"$dir/seen/b$k")
+    // Compaction 1 died after its shard table and before its rows committed.
+    BloomSeen.buildShards(spark.read.parquet(s"$dir/seen/b1").select("url_hash"))
+      .write.parquet(Checkpoints.compactShardsDir(dir, 1L))
+    Files.createDirectories(Paths.get(Checkpoints.compactDir(dir, 1L)))
+
+    Checkpoints.compactSeen(spark, dir, 4L, 2, Some(BloomSeen.buildShards _))
+    assert(!Files.exists(Paths.get(Checkpoints.compactShardsDir(dir, 1L))))
+    assert(!Files.exists(Paths.get(Checkpoints.compactDir(dir, 1L))))
+    assert(Files.exists(Paths.get(Checkpoints.compactShardsDir(dir, 4L), "_SUCCESS")))
+    assert(Checkpoints.seenBase(dir, 4L) === Some(4L))
+    assert(Checkpoints.readSeen(spark, dir, 4L).count() === 4L)
   }
 }

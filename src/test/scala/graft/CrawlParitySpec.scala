@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,19 +19,10 @@ class CrawlParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val cfgBase = CrawlConfig(deltaPerBatchSec = 6L * 3600)
+  private val cfgBase = CrawlParitySpec.cfgBase
 
-  private def loadCaps(sfDir: String): (Seq[PageCap], Seq[String]) = {
-    val fixDir = Fixtures.ensure(spark, sfDir)
-    val caps = spark.read.parquet(s"$fixDir/pages.parquet")
-      .select($"url", unix_timestamp($"warc_ts").as("ts"), $"html", $"text", $"lang")
-      .as[(String, Long, Array[Byte], String, String)]
-      .collect()
-      .map { case (u, ts, h, t, l) => PageCap(u, ts, h, t, l) }
-      .toSeq
-    val seeds = spark.read.parquet(s"$fixDir/seeds.parquet").as[String].collect().toSeq
-    (caps, seeds)
-  }
+  private def loadCaps(sfDir: String): (Seq[PageCap], Seq[String]) =
+    CrawlParitySpec.loadCaps(spark, sfDir)
 
   test("pipeline crawl order and seen set match the sequential oracle (sf0.001)") {
     val (caps, seeds) = loadCaps(TestSpark.Sf0001)
@@ -326,5 +320,83 @@ class CrawlParitySpec extends AnyFunSuite {
     val b = CrawlLoop.articles(spark, r32.dir)
       .select("fetch_order", "url").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(a === b)
+  }
+
+  test("compaction-time Bloom filter: stop after a compaction, resume == oracle and exact-only") {
+    CrawlParitySpec.assertCompactedFilterParity(spark, cfgBase.copy(runTag = "compact_filter"))
+  }
+
+  test("compaction-time filter, broadcast probe: stop after a compaction, resume == oracle and exact-only") {
+    CrawlParitySpec.assertCompactedFilterParity(spark,
+      cfgBase.copy(runTag = "compact_filter_bcast", bloomBroadcastProbe = true))
+  }
+
+  test("compaction-time filter above BroadcastFetchBound: stop after a compaction, resume == oracle and exact-only") {
+    CrawlParitySpec.assertCompactedFilterParity(spark, cfgBase.copy(runTag = "compact_filter_mega",
+      scheduledBoundOverride = graft.operators.Scheduler.BroadcastFetchBound + 1))
+  }
+}
+
+object CrawlParitySpec {
+  import org.scalatest.Assertions._
+
+  val cfgBase: CrawlConfig = CrawlConfig(deltaPerBatchSec = 6L * 3600)
+
+  def loadCaps(spark: SparkSession, sfDir: String): (Seq[PageCap], Seq[String]) = {
+    import spark.implicits._
+    val fixDir = Fixtures.ensure(spark, sfDir)
+    val caps = spark.read.parquet(s"$fixDir/pages.parquet")
+      .select($"url", unix_timestamp($"warc_ts").as("ts"), $"html", $"text", $"lang")
+      .as[(String, Long, Array[Byte], String, String)]
+      .collect()
+      .map { case (u, ts, h, t, l) => PageCap(u, ts, h, t, l) }
+      .toSeq
+    val seeds = spark.read.parquet(s"$fixDir/seeds.parquet").as[String].collect().toSeq
+    (caps, seeds)
+  }
+
+  /** A committed run's articles as (fetch_order, url, batch_id, warc_ts
+    * seconds, text) in fetch order, and its seen set (url → status). */
+  def crawlOutput(spark: SparkSession, run: CrawlLoop.RunResult)
+      : (Seq[(Long, String, Long, Long, String)], Map[String, String]) = {
+    import spark.implicits._
+    val articles = CrawlLoop.articles(spark, run.dir)
+      .select($"fetch_order", $"url", $"batch_id", unix_timestamp($"warc_ts"), $"text")
+      .as[(Long, String, Long, Long, String)].collect().sortBy(_._1).toSeq
+    val seen = CrawlLoop.seenUpTo(spark, run.dir, run.batches)
+      .select($"url", $"status").as[(String, String)].collect().toMap
+    (articles, seen)
+  }
+
+  def hasShardSnapshot(dir: String, k: Long): Boolean =
+    Files.exists(Paths.get(Checkpoints.snapDir(dir, k), "seen_shards"))
+
+  def hasCompactionShards(dir: String, j: Long): Boolean =
+    Files.exists(Paths.get(Checkpoints.compactShardsDir(dir, j), "_SUCCESS"))
+
+  /** Crawl sf0.001 with the seen set compacted every 2 batches, stop right
+    * after the first compaction, then resume to the end. The batches
+    * before it write no shard snapshot, the compaction carries its shard
+    * table, and the batches after it probe that table: fetch order and
+    * seen set must equal the sequential oracle and an exact-only run. */
+  def assertCompactedFilterParity(spark: SparkSession, cfg0: CrawlConfig): Unit = {
+    val cfg = cfg0.copy(seenCompactEvery = 2)
+    val dir = Checkpoints.stateDir(cfg.runTag)
+    CrawlLoop.run(spark, TestSpark.Sf0001, cfg.copy(maxBatches = 2), fresh = true)
+    assert(!hasShardSnapshot(dir, 1), "a batch wrote a shard snapshot")
+    assert(hasCompactionShards(dir, 2), "the compaction carries no shard table")
+    val resumed = CrawlLoop.run(spark, TestSpark.Sf0001, cfg, fresh = false)
+    assert(resumed.batches >= 4, "fixture run too short to probe the compaction's filter")
+    assert((1L to resumed.batches).forall(k => !hasShardSnapshot(dir, k)))
+
+    val (caps, seeds) = loadCaps(spark, TestSpark.Sf0001)
+    val oracle = SequentialCrawler.crawl(caps, seeds, cfg)
+    val (articles, seen) = crawlOutput(spark, resumed)
+    assert(articles === oracle.articles.map(a =>
+      (a.fetchOrder, a.url, a.batchId, a.warcTsSec, a.text)))
+    assert(seen === oracle.seen)
+    val exact = CrawlLoop.run(spark, TestSpark.Sf0001,
+      cfg.copy(runTag = s"${cfg.runTag}_exact", useBloom = false), fresh = true)
+    assert(crawlOutput(spark, exact) === ((articles, seen)))
   }
 }

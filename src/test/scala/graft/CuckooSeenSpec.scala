@@ -117,4 +117,9 @@ class CuckooSeenSpec extends AnyFunSuite {
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(a.nonEmpty && a === b)
   }
+
+  test("compaction-time cuckoo filter: stop after a compaction, resume == oracle and exact-only") {
+    CrawlParitySpec.assertCompactedFilterParity(spark,
+      CrawlParitySpec.cfgBase.copy(runTag = "cuckoo_compact_filter", cuckooSeen = true))
+  }
 }

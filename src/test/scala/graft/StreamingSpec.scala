@@ -380,4 +380,17 @@ class StreamingSpec extends AnyFunSuite {
       assert(e.getMessage.contains(name), s"'$bad': ${e.getMessage}")
     }
   }
+
+  test("pages feed hour range: empty or all-null warc_ts feeds fail with a clear message") {
+    import graft.queries.StreamingQueries.hourRange
+    val ts = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(7200L + 59L))
+    val later = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(5 * 3600L))
+    assert(hourRange(Seq(("u1", ts), ("u2", later), ("u3", null)).toDF("url", "warc_ts")) === ((2L, 5L)))
+    val empty = Seq.empty[(String, java.sql.Timestamp)].toDF("url", "warc_ts")
+    val allNull = Seq(("u1", null: java.sql.Timestamp)).toDF("url", "warc_ts")
+    for ((what, df) <- Seq("empty" -> empty, "all-null warc_ts" -> allNull)) {
+      val e = intercept[IllegalArgumentException](hourRange(df))
+      assert(e.getMessage.contains("no capture hours"), s"$what: ${e.getMessage}")
+    }
+  }
 }
