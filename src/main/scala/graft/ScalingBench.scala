@@ -243,9 +243,6 @@ object ScalingBench {
       val cfg = CrawlConfig(
         deltaPerBatchSec = 365L * 24 * 3600, budgetScale = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET", "2000").toInt,
         maxBatches = 1, cacheInputs = false, localTopKSalt = 16, compactState = false, saltParse = false,
-        // r6 (verdict item 9): opt-in cuckoo tier-1 A/B on the mega-batch —
-        // default off, so every driver-run measurement is unchanged.
-        cuckooSeen = sys.env.get("SPARK_GRAFT_SCALE_CUCKOO").contains("1"),
         runTag = s"scaling_$cpus")
       // Warmup pass (JIT + page cache), then the measured pass on fresh state.
       CrawlLoop.runWithFixtures(spark, xlDir, cfg, fresh = true)

@@ -157,8 +157,7 @@ object CrawlLoop {
     // parts × hosts rows.
     val distHostRank = scheduledBound > Scheduler.BroadcastFetchBound &&
       hostCount <= DistHostRankMaxHosts
-    val buildShards: DataFrame => DataFrame =
-      if (cfg.cuckooSeen) CuckooSeen.buildShards else BloomSeen.buildShards
+    val family = BloomSeen.familyOf(cfg)
 
     // ---- resume point (op 5): max committed manifest ----------------------
     // Running totals are restored from the manifest's cumulative fields so a
@@ -224,7 +223,7 @@ object CrawlLoop {
       if (cfg.seenCompactEvery > 0 && k % cfg.seenCompactEvery == 0)
         timed(s"b$k compactSeen")(
           Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery,
-            Option.when(cfg.useBloom)(buildShards)))
+            Option.when(cfg.useBloom)(BloomSeen.buildShards(_, family))))
       r.cached.foreach(_.unpersist())
 
       // Re-read committed state (truncates lineage across batches).

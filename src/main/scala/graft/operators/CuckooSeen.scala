@@ -1,17 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
 
 import graft.core.Constants
 
-/** Partitioned CUCKOO-filter URL-seen set — the second filter family the
-  * north rule names ("partitioned Bloom/cuckoo filters"), selectable via
-  * `CrawlConfig.cuckooSeen`.
+/** The CUCKOO filter family of the partitioned URL-seen set — the second
+  * family the north rule names ("partitioned Bloom/cuckoo filters"),
+  * selected by `CrawlConfig.cuckooSeen` (see [[BloomSeen.familyOf]]). The
+  * shard plumbing (build, merge, both probe shapes, two-tier anti-join) is
+  * [[BloomSeen]]'s, called with `family = CuckooSeen.Cuckoo`; this object
+  * holds only the filter, its serialization, its [[ShardFilter]] instance
+  * and the one capability Bloom lacks, [[deleteFromShards]].
   *
-  * Why a second tier exists at all: a Bloom filter cannot DELETE. The index
+  * Why a second family exists at all: a Bloom filter cannot DELETE. The index
   * lifecycle already supports takedowns (op 106 tombstones, q103); without a
   * deletable seen tier a taken-down url can never be legitimately
   * re-crawled — the bloom keeps vetoing it until a full filter rebuild. The
@@ -21,20 +23,12 @@ import graft.core.Constants
   * (partial-key cuckoo hashing: i2 = i1 XOR hash(fp)), so membership,
   * insertion AND deletion are all O(1) with ~2b/2^16 false-positive rate —
   * and, like Bloom, NO false negatives for present keys, which is the
-  * property the two-tier anti-join's correctness rests on.
-  *
-  * Everything else mirrors [[BloomSeen]] exactly: `NumShards` shards keyed
-  * by pmod(url_hash, NumShards), one blob per shard, shard-bucketed cogroup
-  * probe (each task deserializes only its own shard once), tier-2 exact
-  * anti-join on the "possibly seen" residue. Deletion discipline: the crawl
-  * inserts each url_hash at most once (the anti-join guarantees it), so
-  * deleting a fetched url removes exactly its own fingerprint copy —
-  * per-key delete-then-reinsert stays exact (the documented cuckoo caveat
-  * about deleting never-inserted keys cannot arise here).
-  *
-  * Coverage is BloomSeen's too: in the crawl the table is built at seen
-  * compaction and covers the compacted base, the later deltas being
-  * anti-joined exactly.
+  * property the two-tier anti-join's correctness rests on. Deletion
+  * discipline: the crawl inserts each url_hash at most once (the anti-join
+  * guarantees it), so deleting a fetched url removes exactly its own
+  * fingerprint copy — per-key delete-then-reinsert stays exact (the
+  * documented cuckoo caveat about deleting never-inserted keys cannot arise
+  * here).
   *
   * Determinism note: CONTAINS results are a pure function of the inserted
   * key multiset (every copy of a fingerprint lives in one of its two
@@ -181,60 +175,26 @@ object CuckooSeen {
     f
   }
 
-  /** Custom typed aggregate folding url_hashes into a cuckoo filter —
-    * the BloomAggregator's deletable sibling. */
-  class CuckooAggregator(expectedItems: Long)
-      extends Aggregator[Long, CuckooFilter, Array[Byte]] {
-    override def zero: CuckooFilter = newFilter(expectedItems)
-    override def reduce(f: CuckooFilter, h: Long): CuckooFilter = { f.insert(h); f }
-    override def merge(a: CuckooFilter, b: CuckooFilter): CuckooFilter =
-      a.mergeInPlace(b)
-    override def finish(f: CuckooFilter): Array[Byte] = serialize(f)
-    override def bufferEncoder: Encoder[CuckooFilter] = Encoders.kryo[CuckooFilter]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  /** The cuckoo family: one [[CuckooFilter]] per shard, sized by
+    * `CuckooExpectedPerShard`. */
+  object Cuckoo extends ShardFilter {
+    type F = CuckooFilter
+    def zero: CuckooFilter = newFilter()
+    def insert(f: CuckooFilter, urlHash: Long): CuckooFilter = { f.insert(urlHash); f }
+    def mightContain(f: CuckooFilter, urlHash: Long): Boolean = f.contains(urlHash)
+    def merge(a: CuckooFilter, b: CuckooFilter): CuckooFilter = a.mergeInPlace(b)
+    def serialize(f: CuckooFilter): Array[Byte] = CuckooSeen.serialize(f)
+    def deserialize(bytes: Array[Byte]): CuckooFilter = CuckooSeen.deserialize(bytes)
+    def bufferEncoder: Encoder[CuckooFilter] = Encoders.kryo[CuckooFilter]
   }
 
-  def cuckooAgg(hashCol: Column): Column =
-    udaf(new CuckooAggregator(Constants.CuckooExpectedPerShard),
-      Encoders.scalaLong)(hashCol)
-
-  /** Build `seen_shards(shard, n_items, filter)` — same schema as the bloom
-    * tier's, same pre-repartition discipline (one live buffer per shard). */
-  def buildShards(withHash: DataFrame): DataFrame =
-    withHash
-      .select(pmod(col("url_hash"), lit(Constants.NumShards)).as("shard"), col("url_hash"))
-      .repartition(col("shard"))
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_items"), cuckooAgg(col("url_hash")).as("filter"))
-
-  /** Merge two shard tables (snapshot + delta) by folding same-shard
-    * fingerprints. #shards rows. */
-  def mergeShards(prev: DataFrame, delta: DataFrame): DataFrame = {
-    val mergeBlobs = udf { (a: Array[Byte], b: Array[Byte]) =>
-      (Option(a), Option(b)) match {
-        case (Some(x), Some(y)) =>
-          serialize(deserialize(x).mergeInPlace(deserialize(y)))
-        case (Some(x), None) => x
-        case (None, Some(y)) => y
-        case _ => null
-      }
-    }
-    prev
-      .select(col("shard"), col("n_items").as("n_prev"), col("filter").as("f_prev"))
-      .join(
-        delta.select(col("shard"), col("n_items").as("n_delta"), col("filter").as("f_delta")),
-        Seq("shard"), "full_outer")
-      .select(
-        col("shard"),
-        (coalesce(col("n_prev"), lit(0L)) + coalesce(col("n_delta"), lit(0L))).as("n_items"),
-        mergeBlobs(col("f_prev"), col("f_delta")).as("filter"))
-  }
-
-  /** THE new capability over Bloom: remove url_hashes from the shard table
-    * (takedown / revocation — pairs with the index tombstones, op 106).
-    * Deletes group to shard-sized lists, each shard's blob is rewritten
-    * once; shards with no deletes pass through untouched. The caller
-    * removes the same keys from `seen_exact` (tier 2) alongside. */
+  /** THE new capability over Bloom: remove url_hashes from a cuckoo shard
+    * table (takedown / revocation — pairs with the index tombstones, op
+    * 106). Deletes group to shard-sized lists, each shard's blob is
+    * rewritten once; shards with no deletes pass through untouched. The
+    * caller removes the same keys from `seen_exact` (tier 2) alongside.
+    * No crawl code calls it yet: `CrawlLoop` has no takedown step, and
+    * CuckooSeenSpec's takedown-then-recrawl test is its only caller. */
   def deleteFromShards(shards: DataFrame, deletes: DataFrame): DataFrame = {
     val applyDel = udf { (blob: Array[Byte], dels: Seq[Long]) =>
       if (blob == null || dels == null) null
@@ -254,54 +214,5 @@ object CuckooSeen {
         col("shard"),
         coalesce(col("upd._2"), col("n_items")).as("n_items"),
         coalesce(col("upd._1"), col("filter")).as("filter"))
-  }
-
-  /** Shard-bucketed probe — the same cogroup shape as
-    * [[BloomSeen.tagMaybeSeenBucketed]], over cuckoo blobs. */
-  def tagMaybeSeenBucketed(candidates: DataFrame, seenShards: DataFrame): DataFrame = {
-    val schema = candidates.schema
-    val hashIdx = schema.fieldIndex("url_hash")
-    val outSchema = schema.add("__maybe_seen", BooleanType, nullable = false)
-    val keyedCands = candidates
-      .groupByKey((r: Row) =>
-        java.lang.Math.floorMod(r.getLong(hashIdx), Constants.NumShards.toLong).toInt)(
-        Encoders.scalaInt)
-    val keyedBlobs = seenShards
-      .select(col("shard").cast("int"), col("filter"))
-      .as[(Int, Array[Byte])](Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
-      .groupByKey(_._1)(Encoders.scalaInt)
-    keyedCands
-      .cogroup(keyedBlobs) { (_, rows, blobs) =>
-        val filter = blobs.map(b => deserialize(b._2)).reduceOption { (a, b) =>
-          a.mergeInPlace(b)
-        }
-        rows.map { r =>
-          val maybe = filter.exists(_.contains(r.getLong(hashIdx)))
-          Row.fromSeq(r.toSeq :+ maybe)
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
-
-  /** Two-tier dedup, cuckoo flavor — same contract as
-    * [[BloomSeen.antiJoinSeen]]: exactly `candidates ∖ seen` (no false
-    * negatives; the exact tier absorbs false positives). */
-  def antiJoinSeen(
-      spark: SparkSession,
-      candidates: DataFrame,
-      seenExact: DataFrame,
-      seenShards: Option[DataFrame]): (DataFrame, Seq[DataFrame]) = {
-    seenShards match {
-      case Some(shards) =>
-        val flagged = tagMaybeSeenBucketed(candidates, shards).cache()
-        val definitelyNew = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen")
-        val residue = flagged
-          .filter(col("__maybe_seen"))
-          .drop("__maybe_seen")
-          .join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti")
-        (definitelyNew.unionByName(residue), Seq(flagged))
-      case None =>
-        (candidates.join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti"), Nil)
-    }
   }
 }

@@ -37,8 +37,7 @@ object FrontierEval {
     * on-topic fraction. A curve that sags toward the overall corpus rate
     * means the topic signal does not propagate over links and best-first
     * focusing buys nothing. */
-  def harvestCurve(relevance: DataFrame, edges: DataFrame, tauPct: Int,
-      parts: Int = 32): DataFrame = {
+  def harvestCurve(relevance: DataFrame, edges: DataFrame, tauPct: Int): DataFrame = {
     require(tauPct >= 0 && tauPct <= 100, "tauPct is a percentage")
     val spark = relevance.sparkSession
     // parent topic score: exact integer counts → one IEEE division (both
@@ -56,11 +55,10 @@ object FrontierEval {
     val tgt = prio.join(onTopic, Seq("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Range partitions ∝ rows (r6): ~1M ranked rows per partition, floored
-    // at 1 — a fixed `parts` on a dim-sized frame is pure task/sampling
+    // at 1 — a fixed count on a dim-sized frame is pure task/sampling
     // overhead, and at corpus scale the row-derived count grows past any
-    // constant as it must (`parts` is kept for API compatibility; the
-    // derived count supersedes it). The count also materializes the
-    // persist exactly once before the two passes.
+    // constant as it must. The count also materializes the persist exactly
+    // once before the two passes.
     val rankParts = GlobalOrder.partsFor(tgt.count())
     val ranked = GlobalOrder.withRunningSumAndRank(
       tgt, "on_topic", Seq(col("priority").desc, col("dst").asc),
@@ -89,7 +87,7 @@ object FrontierEval {
     * few and independent, and a per-strategy scan keeps each sort a pure
     * (key, doc_id) projection. */
   def orderingCurves(scores: DataFrame, valueCol: String,
-      orderings: Seq[(String, Column)], parts: Int = 32): DataFrame = {
+      orderings: Seq[(String, Column)]): DataFrame = {
     require(orderings.nonEmpty, "need at least one ordering")
     val spark = scores.sparkSession
     // Persisted (r6 — round-5 verdict item 3): the mass/count agg plus ONE

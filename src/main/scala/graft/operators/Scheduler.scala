@@ -20,22 +20,24 @@ final case class CrawlConfig(
       * at or below it AQE sizes those from the data (see runBatch).
       * Outputs are invariant to it (rank key is (host_bucket, host)). */
     numBuckets: Int = 32,
-    /** Two-tier bloom dedup (true) vs exact-only anti-join (false); final
-      * sets are identical — the flag exists for the parity test. A batch
-      * with no shard table to probe runs exact-only either way (CrawlLoop:
-      * batches before the first seen compaction). */
+    /** Two-tier filter dedup (true) vs exact-only anti-join (false), for
+      * either filter family; final sets are identical — the flag exists
+      * for the parity test. A batch with no shard table to probe runs
+      * exact-only either way (CrawlLoop: batches before the first seen
+      * compaction). */
     useBloom: Boolean = true,
-    /** Bloom tier-1 probe shape: false (default) = shard-bucketed cogroup —
-      * the 10^10-scale shape, no driver collect / monolithic broadcast;
-      * true = broadcast-map fast path for small seen-states. Final sets are
-      * identical either way (BloomSeenSpec parity). */
+    /** Tier-1 probe shape, for either filter family: false (default) =
+      * shard-bucketed cogroup — the 10^10-scale shape, no driver collect /
+      * monolithic broadcast; true = broadcast-map fast path for small
+      * seen-states. Final sets are identical either way (BloomSeenSpec and
+      * CuckooSeenSpec parity). */
     bloomBroadcastProbe: Boolean = false,
-    /** Tier-1 filter family: false (default) = Bloom, true = cuckoo — the
-      * DELETABLE family the north rule also names; takedowns can then
-      * remove seen entries (CuckooSeen.deleteFromShards) instead of
-      * waiting for a full filter rebuild. Final sets are identical for any
-      * un-deleted state (no false negatives either way — parity pinned in
-      * CuckooSeenSpec). */
+    /** Tier-1 filter family (BloomSeen.familyOf): false (default) = Bloom,
+      * true = cuckoo — the DELETABLE family the north rule also names, so
+      * a takedown could remove seen entries (CuckooSeen.deleteFromShards)
+      * instead of rebuilding the filter; the crawl loop has no takedown
+      * step yet, so nothing calls it there. Final sets are identical (no
+      * false negatives either way — parity pinned in CuckooSeenSpec). */
     cuckooSeen: Boolean = false,
     /** Post-budget salted repartition of the fetch/parse stage (op 51). */
     saltParse: Boolean = true,
@@ -448,7 +450,7 @@ object Scheduler {
 
   /** Run one micro-batch. `frontier`: (url, host, discovered_ts) queued rows;
     * `seenExact`: (url_hash, url, status); `seenShards`: the filter blobs
-    * summarizing `seenExact`; `seenRecent`: seen rows the shard table does
+    * (family `BloomSeen.familyOf(cfg)`) summarizing `seenExact`; `seenRecent`: seen rows the shard table does
     * not cover (the deltas after the compaction it summarizes, see
     * CrawlLoop), anti-joined exactly before the two-tier probe — the seen
     * set is then `seenRecent ∪ seenExact`; dims: robots/weights/budgets
@@ -503,14 +505,9 @@ object Scheduler {
     // ---- two-tier vs the rows the shard table summarizes -----------------
     val unseenRecent = seenRecent.fold(cands)(recent =>
       cands.join(recent.select("url_hash"), Seq("url_hash"), "left_anti"))
-    val (newRows, dedupCached) = registerCaches {
-      if (cfg.cuckooSeen)
-        CuckooSeen.antiJoinSeen(spark, unseenRecent, seenExact,
-          if (cfg.useBloom) Some(seenShards) else None)
-      else
-        BloomSeen.antiJoinSeen(spark, unseenRecent, seenExact,
-          if (cfg.useBloom) Some(seenShards) else None, cfg.bloomBroadcastProbe)
-    }
+    val (newRows, dedupCached) = registerCaches(
+      BloomSeen.antiJoinSeen(spark, unseenRecent, seenExact,
+        Option.when(cfg.useBloom)(seenShards), cfg.bloomBroadcastProbe, BloomSeen.familyOf(cfg)))
 
     // ---- robots + priority + politeness ranking (ops 13/49/38/51/24/25) ---
     val sched = registerCaches(

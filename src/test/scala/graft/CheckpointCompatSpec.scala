@@ -98,7 +98,7 @@ class CheckpointCompatSpec extends AnyFunSuite {
       .write.parquet(Checkpoints.compactShardsDir(dir, 1L))
     Files.createDirectories(Paths.get(Checkpoints.compactDir(dir, 1L)))
 
-    Checkpoints.compactSeen(spark, dir, 4L, 2, Some(BloomSeen.buildShards _))
+    Checkpoints.compactSeen(spark, dir, 4L, 2, Some(BloomSeen.buildShards(_)))
     assert(!Files.exists(Paths.get(Checkpoints.compactShardsDir(dir, 1L))))
     assert(!Files.exists(Paths.get(Checkpoints.compactDir(dir, 1L))))
     assert(Files.exists(Paths.get(Checkpoints.compactShardsDir(dir, 4L), "_SUCCESS")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Constants
-import graft.operators.{CrawlConfig, CrawlLoop, CuckooSeen}
+import graft.operators.{BloomSeen, CrawlConfig, CrawlLoop, CuckooSeen}
 
 /** The cuckoo seen tier (north_rule's second filter family): no false
   * negatives at design load, deletability (the capability Bloom lacks),
@@ -14,6 +14,7 @@ import graft.operators.{CrawlConfig, CrawlLoop, CuckooSeen}
 class CuckooSeenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import CuckooSeen.Cuckoo
 
   private def hashesOf(n: Int): Seq[Long] =
     (1L to n.toLong).map(i => i * 2654435761L + 17L)
@@ -49,9 +50,9 @@ class CuckooSeenSpec extends AnyFunSuite {
   test("buildShards + mergeShards: membership preserved, n_items bookkeeping") {
     val a = hashesOf(500)
     val b = (10001L to 10500L).map(i => i * 31L)
-    val merged = CuckooSeen.mergeShards(
-      CuckooSeen.buildShards(a.toDF("url_hash")),
-      CuckooSeen.buildShards(b.toDF("url_hash")))
+    val merged = BloomSeen.mergeShards(
+      BloomSeen.buildShards(a.toDF("url_hash"), Cuckoo),
+      BloomSeen.buildShards(b.toDF("url_hash"), Cuckoo), Cuckoo)
       .select($"shard".cast("int"), $"n_items", $"filter")
       .as[(Int, Long, Array[Byte])].collect()
     val filters = merged.map { case (s, _, blob) => s -> CuckooSeen.deserialize(blob) }.toMap
@@ -68,18 +69,21 @@ class CuckooSeenSpec extends AnyFunSuite {
     val cands = ((1L to 1500L).map(i => i * 31L) ++ (1L to 1500L).map(i => i * 31L + 7L))
       .toDF("url_hash")
       .withColumn("url", concat(lit("c"), col("url_hash")))
-    val shards = CuckooSeen.buildShards(seen.select("url_hash"))
-    val (cuckooDf, cached) = CuckooSeen.antiJoinSeen(spark, cands, seen, Some(shards))
+    val shards = BloomSeen.buildShards(seen.select("url_hash"), Cuckoo)
+    val (cuckooDf, cached) = BloomSeen.antiJoinSeen(spark, cands, seen, Some(shards),
+      family = Cuckoo)
     val cuckoo = cuckooDf.select("url_hash").as[Long].collect().sorted.toSeq
     cached.foreach(_.unpersist())
-    val exact = CuckooSeen.antiJoinSeen(spark, cands, seen, None)._1
+    val cuckooBroadcast = BloomSeen.antiJoinSeen(spark, cands, seen, Some(shards),
+      broadcastProbe = true, family = Cuckoo)._1
       .select("url_hash").as[Long].collect().sorted.toSeq
-    val bloomShards = graft.operators.BloomSeen.buildShards(seen.select("url_hash"))
-    val (bloomDf, bc) = graft.operators.BloomSeen.antiJoinSeen(
-      spark, cands, seen, Some(bloomShards))
+    val exact = BloomSeen.antiJoinSeen(spark, cands, seen, None)._1
+      .select("url_hash").as[Long].collect().sorted.toSeq
+    val bloomShards = BloomSeen.buildShards(seen.select("url_hash"))
+    val (bloomDf, bc) = BloomSeen.antiJoinSeen(spark, cands, seen, Some(bloomShards))
     val bloom = bloomDf.select("url_hash").as[Long].collect().sorted.toSeq
     bc.foreach(_.unpersist())
-    assert(cuckoo === exact && bloom === exact)
+    assert(cuckoo === exact && cuckooBroadcast === exact && bloom === exact)
     assert(cuckoo.length === 1500)
   }
 
@@ -89,14 +93,14 @@ class CuckooSeenSpec extends AnyFunSuite {
     val all = (1L to 2000L).map(i => i * 97L + 5L)
     val (revoked, kept) = all.splitAt(300)
     val seenExact = all.toDF("url_hash").withColumn("status", lit("fetched"))
-    val shards0 = CuckooSeen.buildShards(seenExact.select("url_hash"))
+    val shards0 = BloomSeen.buildShards(seenExact.select("url_hash"), Cuckoo)
     val shards1 = CuckooSeen.deleteFromShards(shards0, revoked.toDF("url_hash"))
     val exactAfter = seenExact.join(
       revoked.toDF("url_hash"), Seq("url_hash"), "left_anti")
     val cands = all.toDF("url_hash")
       .withColumn("url", concat(lit("c"), col("url_hash")))
     val (readmitDf, cached) =
-      CuckooSeen.antiJoinSeen(spark, cands, exactAfter, Some(shards1))
+      BloomSeen.antiJoinSeen(spark, cands, exactAfter, Some(shards1), family = Cuckoo)
     val readmit = readmitDf.select("url_hash").as[Long].collect().toSet
     cached.foreach(_.unpersist())
     assert(readmit === revoked.toSet)

@@ -19,7 +19,7 @@ class FrontierEvalSpec extends AnyFunSuite {
     // targets: d2 (from d1:.5, d3:.25 → prio .5), d3 (from d1 → .5),
     // d4 (from d2 → 0). Crawl order d2, d3, d4; only d4 is on-topic.
     val edges = Seq((1L, 2L), (3L, 2L), (1L, 3L), (2L, 4L)).toDF("src", "dst")
-    val got = FrontierEval.harvestCurve(rel, edges, tauPct = 50, parts = 3)
+    val got = FrontierEval.harvestCurve(rel, edges, tauPct = 50)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1)
     assert(got.length === 10, "one row per decile even when cuts repeat")
     // deciles 1-3 cut at rank 1, 4-6 at rank 2, 7-10 at rank 3
@@ -32,7 +32,7 @@ class FrontierEvalSpec extends AnyFunSuite {
     val scores = Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L))
       .toDF("doc_id", "mass")
     val got = FrontierEval.orderingCurves(scores, "mass", Seq(
-      ("bymass", -col("mass")), ("byid", col("doc_id"))), parts = 2)
+      ("bymass", -col("mass")), ("byid", col("doc_id"))))
       .as[(String, Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
     assert(got.size === 20)
