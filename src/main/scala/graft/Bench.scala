@@ -26,6 +26,14 @@ import graft.operators.CrawlLoop
   * (plus "crawl_e2e" if it matches) — local iteration aid.
   */
 object Bench {
+  /** A committed ladder JSON file as one compact line, to embed in the
+    * one-line bench JSON; "null" when the file is missing or not a JSON
+    * object. */
+  private[graft] def readLadder(path: String): String = try {
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(path))
+    if (tree != null && tree.isObject) tree.toString else "null"
+  } catch { case _: Throwable => "null" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -85,19 +93,24 @@ object Bench {
     // "queries" map carries the MIN, and "query_walls" carries every wall
     // so a reader can audit the spread. (The crawl keeps its single run —
     // it has its own per-phase trace via SPARK_GRAFT_CRAWL_TRACE, as
-    // q46/q50's CC rounds do via SPARK_GRAFT_CORPUS_TRACE.)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // q46/q50's CC rounds do via SPARK_GRAFT_CORPUS_TRACE.) An entry whose
+    // run throws is listed under "failed" and is never timed: it stays out
+    // of "queries", "query_walls" and the total.
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
         def once(): Double = {
           val s0 = System.nanoTime()
-          try { fn(spark, sfDir).count() }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1L }
+          fn(spark, sfDir).count()
           (System.nanoTime() - s0) / 1e9
         }
-        val w1 = once()
-        name -> (if (w1 > 2.0) Seq(w1, once()) else Seq(w1))
+        name -> (try {
+          val w1 = once()
+          Some(if (w1 > 2.0) Seq(w1, once()) else Seq(w1))
+        } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None })
       }
+    val results = runs.collect { case (k, Some(ws)) => k -> ws }
+    val failed = runs.collect { case (k, None) => "\"" + k + "\"" }.mkString("[", ",", "]")
     val crawlSec = crawlJson.map(_._1)
     val qs = (results.map { case (k, ws) => k -> ws.min } ++ crawlSec.map("crawl_e2e" -> _))
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -108,7 +121,7 @@ object Bench {
 
     def benchLine(scaling: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""query_walls":$walls,""" +
+        s""""query_walls":$walls,"failed":$failed,""" +
         s""""sf":"$sfDir","cpus":$cpus""" +
         crawlJson.map("," + _._2).getOrElse("") +
         scaling + "}"
@@ -206,10 +219,6 @@ object Bench {
         // ladder_ref cites the committed MEASURED artifacts (bench_ladder
         // .json + bench_pipeline_ladder.json, both written by
         // graft.ScalingBench) — never baked-in constants.
-        def readLadder(path: String): String = try {
-          val s = java.nio.file.Files.readString(java.nio.file.Paths.get(path)).trim
-          if (s.startsWith("{")) s else "null"
-        } catch { case _: Throwable => "null" }
         val ladder = readLadder(
           sys.env.getOrElse("SPARK_GRAFT_LADDER_REF", "/root/repo/bench_ladder.json"))
         val pipeLadder = readLadder(

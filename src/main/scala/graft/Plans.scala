@@ -70,7 +70,7 @@ object Plans {
     val seen = (1L to 200L).map(i => (i * 13L, s"u$i")).toDF("url_hash", "url")
     val shards = graft.operators.BloomSeen.buildShards(seen.select("url_hash"))
     val probeCands = (1L to 100L).map(i => (i * 13L, s"c$i")).toDF("url_hash", "url")
-    sb.append("## 5. Shard-bucketed seen-filter probe (op 12 tier 1; Bloom family shown, cuckoo plans the same): cogroup, one blob deserialize per task, no driver collect\n\n```\n")
+    sb.append("## 5. Shard-bucketed Bloom probe (op 12 tier 1): cogroup, one blob deserialize per task, no driver collect\n\n```\n")
     sb.append(fmt(graft.operators.BloomSeen.tagMaybeSeenBucketed(probeCands, shards)))
     sb.append("```\n\n")
 

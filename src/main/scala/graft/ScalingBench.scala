@@ -299,74 +299,6 @@ object ScalingBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** STREAM-style triad kernel over a PER-THREAD slice far larger than any
-    * LLC share: a(i) = b(i) + s·c(i), `passes` sweeps (r6 — round-5 verdict
-    * item 4's memory-bandwidth bracket). The CPU burn above is cache-
-    * resident by design and cannot see the dimension §6g's try 10 showed
-    * actually varies between host windows (memory bandwidth / page-cache
-    * state); this kernel is bandwidth-bound by design: per-thread traffic
-    * is constant (3 arrays × 8 B × elems × passes), so
-    * efficiency(a→b) = wallₐ/wallᵦ exactly like the CPU burn. Arrays are
-    * allocated and first-touched INSIDE each worker thread. */
-  private def triadKernel(elems: Int, passes: Int, seed: Long): Double = {
-    val a = new Array[Double](elems)
-    val b = new Array[Double](elems)
-    val c = new Array[Double](elems)
-    var i = 0
-    while (i < elems) { b(i) = (i ^ seed).toDouble; c(i) = (i + seed).toDouble; i += 1 }
-    val s = 3.0
-    var p = 0
-    var acc = 0.0
-    while (p < passes) {
-      var j = 0
-      while (j < elems) { a(j) = b(j) + s * c(j); j += 1 }
-      acc += a(p % elems) // defeat dead-code elimination per pass
-      p += 1
-    }
-    acc
-  }
-
-  @volatile private var triadSink = 0.0
-
-  /** `threads` Java threads × constant per-thread triad traffic; wall sec. */
-  def triad(threads: Int, elemsPerThread: Int, passes: Int): Double = {
-    triadSink += triadKernel(math.min(elemsPerThread, 1 << 20), 2, 1L) // JIT warmup
-    val accs = new java.util.concurrent.atomic.DoubleAdder()
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { i =>
-      val t = new Thread(() => accs.add(triadKernel(elemsPerThread, passes, i + 2L)))
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    triadSink += accs.sum()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Triad burn in a fresh child JVM (same discipline as [[burnFreshJvm]]);
-    * returns wall sec. Heap sized for threads × 3 arrays + slack. */
-  def triadFreshJvm(threads: Int, elemsPerThread: Int, passes: Int): Double = {
-    val classes = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
-    val heapGb = math.max(2L, (threads.toLong * elemsPerThread * 3 * 8 * 3 / 2) >> 30)
-    val cmd = Seq("java", "-cp", s"$classes:/opt/spark/jars/*", s"-Xmx${heapGb}g",
-      "graft.ScalingBench", "triad", threads.toString,
-      elemsPerThread.toString, passes.toString)
-    val pb = new ProcessBuilder(cmd: _*)
-    val errFile = java.io.File.createTempFile(s"graft-triad-$threads-", ".stderr")
-    errFile.deleteOnExit()
-    pb.redirectError(errFile)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val rc = p.waitFor()
-    """"triad_wall_sec":([0-9.eE+-]+)""".r.findFirstMatchIn(out) match {
-      case Some(m) => m.group(1).toDouble
-      case None =>
-        val err = try java.nio.file.Files.readString(errFile.toPath).takeRight(2000)
-          catch { case _: Throwable => "<unreadable>" }
-        sys.error(s"triad child (t=$threads) rc=$rc produced no line: $out; stderr tail: $err")
-    }
-  }
-
   /** Burn in a fresh child JVM (same harness discipline as the engine
     * levels); returns wall sec. */
   def burnFreshJvm(threads: Int, perThread: Long): Double = {
@@ -457,11 +389,6 @@ object ScalingBench {
     if (args.length >= 3 && args(0) == "burn") {
       val wall = burn(args(1).toInt, args(2).toLong)
       println(s"""{"burn_threads":${args(1)},"burn_per_thread":${args(2)},"burn_wall_sec":$wall}""")
-      return
-    }
-    if (args.length >= 4 && args(0) == "triad") {
-      val wall = triad(args(1).toInt, args(2).toInt, args(3).toInt)
-      println(s"""{"triad_threads":${args(1)},"triad_elems":${args(2)},"triad_passes":${args(3)},"triad_wall_sec":$wall}""")
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

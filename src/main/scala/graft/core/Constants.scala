@@ -37,10 +37,6 @@ object Constants {
   val BloomExpectedPerShard: Long = 100000L
   val BloomFpp: Double = 0.01
 
-  /** Expected insertions per cuckoo shard (sizing: power-of-two buckets at
-    * ≤84% target load; 16-bit fingerprints → fp rate ≈ 2·4/2^16). */
-  val CuckooExpectedPerShard: Long = 100000L
-
   /** Number of links a listing (root) page exposes (FIXTURES.md B2). */
   val ListingLinks: Int = 10
 

@@ -201,16 +201,23 @@ object Checkpoints {
   // (e.g. the rerun of a killed batch) still resolve: the PREVIOUS
   // compaction and the last K deltas are always retained.
   //
-  // A compaction may carry the seen-set shard table that summarizes it,
-  // `seen_compact_shards/c<k>`, written BEFORE the rows: a visible
+  // A compaction may carry the Bloom shard table that summarizes it,
+  // `seen_compact_bloom/c<k>`, written BEFORE the rows: a visible
   // compaction therefore never lacks the table it was built with. Tables
   // are optional — compactions from before they existed, or from runs with
-  // the filter tier off (`useBloom = false`), have none.
+  // the filter tier off (`useBloom = false`), have none. The directory name
+  // records the filter family. Tables under the older
+  // `seen_compact_shards/c<k>` may hold either of two families' bytes, so
+  // they are never read (their compactions are probed exactly) and the
+  // next compaction deletes them.
   // ------------------------------------------------------------------
 
   def compactDir(dir: String, j: Long): String = s"$dir/seen_compact/c$j"
 
-  def compactShardsDir(dir: String, j: Long): String = s"$dir/seen_compact_shards/c$j"
+  private val ShardsTable = "seen_compact_bloom"
+  private val LegacyShardsTable = "seen_compact_shards"
+
+  def compactShardsDir(dir: String, j: Long): String = s"$dir/$ShardsTable/c$j"
 
   /** Ids j of every `c<j>` entry under `dir/<table>`, committed or not. */
   private def listCompactions(dir: String, table: String): Seq[Long] = {
@@ -259,7 +266,8 @@ object Checkpoints {
     * release deltas (and compactions) no reader can still need: any live
     * reader has upTo ≥ k-1 ≥ k-every, so deltas ≤ k-every (covered by the
     * PREVIOUS compaction) and compactions < k-every are dead — rows and
-    * shard tables alike, committed or torn. Call after commitManifest(k).
+    * shard tables alike, committed or torn, and every legacy
+    * `seen_compact_shards` table. Call after commitManifest(k).
     *
     * With `buildShards`, the shard table summarizing the compacted rows is
     * built from the same effective frame and committed first. Without it,
@@ -277,8 +285,9 @@ object Checkpoints {
       deleteRecursively(s"$dir/seen/b$i")
     for (j <- listCompactions(dir, "seen_compact") if j < k - every)
       deleteRecursively(compactDir(dir, j))
-    for (j <- listCompactions(dir, "seen_compact_shards") if j < k - every)
+    for (j <- listCompactions(dir, ShardsTable) if j < k - every)
       deleteRecursively(compactShardsDir(dir, j))
+    deleteRecursively(s"$dir/$LegacyShardsTable")
   }
 
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =

@@ -22,14 +22,17 @@ import graft.core.{Constants, Fixtures}
   *  - `frontier` is a full snapshot per batch (rows leave the frontier when
   *    scheduled/excluded); its size is the discovery-fetch backlog, not the
   *    corpus.
-  *  - The seen-set filter (Bloom or cuckoo shard blobs, NumShards rows) is
+  *  - The seen-set filter (Bloom shard blobs, NumShards rows) is
   *    built only when the seen set is compacted, as
-  *    `seen_compact_shards/c<j>` beside the compaction it summarizes, as LSM
+  *    `seen_compact_bloom/c<j>` beside the compaction it summarizes, as LSM
   *    stores keep one filter per file. Each batch anti-joins the deltas
   *    committed since that compaction exactly; no per-batch
   *    `snap=k/seen_shards` is written (older state's snapshots are ignored).
   *  - A filter that could miss rows is never trusted: a compaction without
   *    a table (older state, or a run with the tier off) is probed exactly.
+  *    So is one whose table sits under the older `seen_compact_shards`
+  *    name, which may hold another filter family's bytes; the next
+  *    compaction deletes those tables.
   *
   * Termination: the loop stops when the frontier is empty AND the Δ-scan
   * high-water mark has passed the last page capture (or at cfg.maxBatches).
@@ -157,7 +160,6 @@ object CrawlLoop {
     // parts × hosts rows.
     val distHostRank = scheduledBound > Scheduler.BroadcastFetchBound &&
       hostCount <= DistHostRankMaxHosts
-    val family = BloomSeen.familyOf(cfg)
 
     // ---- resume point (op 5): max committed manifest ----------------------
     // Running totals are restored from the manifest's cumulative fields so a
@@ -223,7 +225,7 @@ object CrawlLoop {
       if (cfg.seenCompactEvery > 0 && k % cfg.seenCompactEvery == 0)
         timed(s"b$k compactSeen")(
           Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery,
-            Option.when(cfg.useBloom)(BloomSeen.buildShards(_, family))))
+            Option.when(cfg.useBloom)(BloomSeen.buildShards(_))))
       r.cached.foreach(_.unpersist())
 
       // Re-read committed state (truncates lineage across batches).

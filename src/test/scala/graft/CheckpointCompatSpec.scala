@@ -4,14 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Constants
 import graft.operators.{BloomSeen, Checkpoints, CrawlLoop}
 
 /** Backward compatibility of the checkpoint format (round-2 ADVICE): a
   * pre-upgrade state dir (manifests without the cumulative *_total fields;
   * fetch_log deltas without urls_article) must resume with CORRECT running
   * totals, not silent zeros, and batchCounts must not fail. State written
-  * before compactions carried seen-set shard tables must resume to the
-  * same crawl. */
+  * before compactions carried seen-set shard tables, or with tables under
+  * the older family-blind name, must resume to the same crawl. */
 class CheckpointCompatSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -71,21 +72,35 @@ class CheckpointCompatSpec extends AnyFunSuite {
   }
 
   test("old layout: a compaction without a shard table resumes to the uninterrupted crawl") {
-    val cfg = cfgBase.copy(runTag = "compat_old_layout", seenCompactEvery = 2)
-    val dir = Checkpoints.stateDir(cfg.runTag)
-    CrawlLoop.run(spark, TestSpark.Sf0001, cfg.copy(maxBatches = 3), fresh = true)
-    // The layout written before compactions carried shard tables: a Bloom
-    // snapshot per batch, and compactions of rows only.
-    Checkpoints.deleteRecursively(s"$dir/seen_compact_shards")
-    for (k <- 1L to 3L)
-      BloomSeen.buildShards(CrawlLoop.seenUpTo(spark, dir, k).select("url_hash"))
-        .write.parquet(s"${Checkpoints.snapDir(dir, k)}/seen_shards")
-    assert(Checkpoints.seenBase(dir, 3L) === Some(2L) && !hasCompactionShards(dir, 2L))
+    // Two inputs: the layout written before compactions carried shard
+    // tables, and a compaction whose table sits under the older
+    // `seen_compact_shards` name and holds non-Bloom bytes (a cuckoo header:
+    // bucket count 32768, then the item count).
+    for (legacyTable <- Seq(false, true)) {
+      val cfg = cfgBase.copy(runTag = s"compat_old_layout_$legacyTable", seenCompactEvery = 2)
+      val dir = Checkpoints.stateDir(cfg.runTag)
+      CrawlLoop.run(spark, TestSpark.Sf0001, cfg.copy(maxBatches = 3), fresh = true)
+      // A Bloom snapshot per batch, and compactions of rows only.
+      Checkpoints.deleteRecursively(Paths.get(Checkpoints.compactShardsDir(dir, 2L)).getParent.toString)
+      for (k <- 1L to 3L)
+        BloomSeen.buildShards(CrawlLoop.seenUpTo(spark, dir, k).select("url_hash"))
+          .write.parquet(s"${Checkpoints.snapDir(dir, k)}/seen_shards")
+      if (legacyTable) {
+        val n = CrawlLoop.seenUpTo(spark, dir, 2L).count()
+        val blob = java.nio.ByteBuffer.allocate(12).putInt(32768).putLong(n).array()
+        (0 until Constants.NumShards).map(s => (s, n, blob)).toDF("shard", "n_items", "filter")
+          .write.parquet(s"$dir/seen_compact_shards/c2")
+      } else
+        assert(!hasCompactionShards(dir, 2L))
+      assert(Checkpoints.seenBase(dir, 3L) === Some(2L))
 
-    val resumed = CrawlLoop.run(spark, TestSpark.Sf0001, cfg, fresh = false)
-    assert(crawlOutput(spark, resumed) === uninterrupted)
-    assert(Checkpoints.seenBase(dir, resumed.batches).exists(j => j > 3L && hasCompactionShards(dir, j)),
-      "the newest compaction after the resume has no shard table")
+      val resumed = CrawlLoop.run(spark, TestSpark.Sf0001, cfg, fresh = false)
+      assert(crawlOutput(spark, resumed) === uninterrupted, s"legacyTable = $legacyTable")
+      assert(Checkpoints.seenBase(dir, resumed.batches).exists(j => j > 3L && hasCompactionShards(dir, j)),
+        "the newest compaction after the resume has no shard table")
+      if (legacyTable)
+        assert(!Files.exists(Paths.get(dir, "seen_compact_shards")), "the legacy tables were kept")
+    }
   }
 
   test("compactSeen releases old shard tables and torn compactions, committed or not") {

@@ -282,4 +282,14 @@ class CoreSpec extends AnyFunSuite {
     assert(got("https://h/tag/x") && !got("https://h/other"))
     assert(!got("https://norules/articles/120"), "host without a rules row is allowed")
   }
+
+  test("bench: committed ladders embed as one line of valid JSON") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (path <- Seq("bench_ladder.json", "bench_pipeline_ladder.json")) {
+      val line = Bench.readLadder(path)
+      assert(!line.contains('\n'), s"$path embeds a newline")
+      assert(mapper.readTree(line) === mapper.readTree(new java.io.File(path)), path)
+    }
+    assert(Bench.readLadder("no_such_ladder.json") === "null")
+  }
 }

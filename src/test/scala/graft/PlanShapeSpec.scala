@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Canonicalize, Constants, Fixtures}
-import graft.operators.{BatchResult, BloomSeen, Checkpoints, CrawlConfig, CrawlLoop, CuckooSeen,
-  Scheduler, ShardFilter}
+import graft.operators.{BatchResult, BloomSeen, Checkpoints, CrawlConfig, CrawlLoop, Scheduler}
 
 /** Physical-plan shape pins (SURVEY.md §4): these are the load-bearing
   * optimizer facts the 100 TB design relies on. If a Spark upgrade or a
@@ -260,37 +259,30 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  /** Both tier-1 filter families run through the one shard plumbing. */
-  private val families: Seq[ShardFilter] = Seq(BloomSeen.Bloom, CuckooSeen.Cuckoo)
-
   test("bucketed bloom probe: cogroup, blob never joins per-candidate") {
     withStaticPlans {
-      for (family <- families) {
-        val seen = (1L to 100L).map(i => (i * 13L, s"u$i")).toDF("url_hash", "url")
-        val shards = BloomSeen.buildShards(seen.select("url_hash"), family)
-        val cands = (1L to 50L).map(i => (i * 13L, s"c$i")).toDF("url_hash", "url")
-        val flagged = BloomSeen.tagMaybeSeenBucketed(cands, shards, family)
-        val plan = flagged.queryExecution.executedPlan
-        assert(plan.toString.contains("CoGroup"),
-          s"$family bucketed probe did not plan a CoGroup:\n$plan")
-        // the blob column must never appear in a join output (it only feeds
-        // the cogroup's right iterator)
-        val joins = plan.collect {
-          case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
-        }
-        assert(!joins.exists(_.output.exists(_.name == "filter")),
-          s"$family blob column attached to a per-candidate join")
+      val seen = (1L to 100L).map(i => (i * 13L, s"u$i")).toDF("url_hash", "url")
+      val shards = BloomSeen.buildShards(seen.select("url_hash"))
+      val cands = (1L to 50L).map(i => (i * 13L, s"c$i")).toDF("url_hash", "url")
+      val flagged = BloomSeen.tagMaybeSeenBucketed(cands, shards)
+      val plan = flagged.queryExecution.executedPlan
+      assert(plan.toString.contains("CoGroup"),
+        s"bucketed probe did not plan a CoGroup:\n$plan")
+      // the blob column must never appear in a join output (it only feeds
+      // the cogroup's right iterator)
+      val joins = plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
       }
+      assert(!joins.exists(_.output.exists(_.name == "filter")),
+        "bloom blob column attached to a per-candidate join")
     }
   }
 
   test("buildShards: explicit repartition satisfies the agg distribution (1 shuffle)") {
     withStaticPlans {
-      for (family <- families) {
-        val shards = BloomSeen.buildShards((1L to 1000L).toDF("url_hash"), family)
-        val n = shuffles(shards).size
-        assert(n === 1, s"$family: expected 1 shuffle (repartition reused by agg), got $n")
-      }
+      val shards = BloomSeen.buildShards((1L to 1000L).toDF("url_hash"))
+      val n = shuffles(shards).size
+      assert(n === 1, s"expected 1 shuffle (repartition reused by agg), got $n")
     }
   }
 
