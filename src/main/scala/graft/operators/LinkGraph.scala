@@ -19,6 +19,11 @@ import org.apache.spark.sql.functions._
   * on the (dst, term) AGGREGATED grain, the op-49 discipline). At a
   * 10^10-url graph the edge table shuffles 8-byte ids + short anchor
   * strings only.
+  *
+  * The iterative kernels that checkpoint per round (BFS, OPIC, LPA,
+  * HyperBall) materialize their loop-invariant edge-side inputs once
+  * through [[Rounds.hoisted]] and free them before returning; their
+  * results read only their own final checkpoints.
   */
 object LinkGraph {
 
@@ -66,24 +71,53 @@ object LinkGraph {
     * [[graft.ml.Corpus.connectedComponents]] does). */
   def seedDepths(edges: DataFrame, seeds: DataFrame, rounds: Int = 6): DataFrame = {
     require(rounds >= 1 && rounds <= 32, "rounds must be in [1,32]")
-    // Persisted (r6): every round's eager delta checkpoint re-instantiated
-    // the full upstream edge plan — one evaluation, `rounds` cache reads.
-    val e = edges.select(col("src"), col("dst")).persist()
-    var dist = seeds.select(col("doc_id").as("node"), lit(0).as("depth"))
-      .distinct().localCheckpoint()
+    val dist = Rounds.hoisted(edges.select(col("src"), col("dst"))) { e =>
+      deltaBfs(e, seeds.select(col("doc_id").as("node"), lit(0).as("d")).distinct(),
+        Nil, rounds)
+    }
+    dist.select(col("node").as("doc_id"), col("d").as("depth"))
+  }
+
+  /** The delta BFS behind [[seedDepths]], [[harmonicExact]] and
+    * [[neighborhoodFunction]]: from `dist0` (`keys`, node, d = 0), round
+    * r joins the round-r−1 frontier to the hoisted edge relation `e`
+    * (src, dst) and anti-joins the rows already reached on (`keys`,
+    * node). Every frontier and reached set is an eager localCheckpoint
+    * and the superseded ones are freed, so the returned reached set
+    * (`keys`, node, d) is the only storage left and reads nothing lazy —
+    * `e` may be freed once this returns. */
+  private def deltaBfs(e: DataFrame, dist0: DataFrame, keys: Seq[String],
+      rounds: Int): DataFrame = {
+    var dist = dist0.localCheckpoint()
     var frontier = dist
     for (r <- 1 to rounds) {
       val next = frontier
         .join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(r).as("depth"))
+        .select(keys.map(col) :+ col("dst").as("node"): _*).distinct()
+        .join(dist, keys :+ "node", "left_anti")
+        .select(keys.map(col) ++ Seq(col("node"), lit(r).as("d")): _*)
         .localCheckpoint()
-      dist = dist.unionAll(next).localCheckpoint()
+      val reached = dist.unionAll(next).localCheckpoint()
+      Rounds.free(frontier) // round 1's frontier is dist itself
+      Rounds.free(dist)
+      dist = reached
       frontier = next
     }
-    dist.select(col("node").as("doc_id"), col("depth"))
+    Rounds.free(frontier)
+    dist
   }
+
+  /** Every (origin, node, d) with d = the hop distance from origin to
+    * node, d ≤ `rounds`, over the self-loop-free distinct edges — the
+    * exact pair table of [[harmonicExact]] and [[neighborhoodFunction]]. */
+  private def pairDistances(edges: DataFrame, rounds: Int): DataFrame =
+    Rounds.hoisted(edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct()) { e =>
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      deltaBfs(e, nodes.select(col("node").as("origin"), col("node"), lit(0).as("d")),
+        Seq("origin"), rounds)
+    }
 
   /** TrustRank: PageRank personalized to a trusted seed set — the
     * teleport vector is uniform over `seeds` (and zero elsewhere)
@@ -253,11 +287,23 @@ object LinkGraph {
     * formula; only the in-mass addition order differs and the 6-dp output
     * rounding absorbs it). Every round is two hash-keyed equi-joins plus
     * one hash agg on node ids — no driver-side graph state; the dangling
-    * mass is a 1-row broadcast crossJoin (constant attach). */
+    * mass is a 1-row broadcast crossJoin (constant attach). The edges and
+    * out-degrees every round reads are hoisted (Rounds' hoist rule). */
   def opicFixed(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 16, "iters must be in [1,16]")
-    val e = edges.select(col("src"), col("dst"))
-    val outd = e.groupBy("src").agg(count(lit(1)).as("outd"))
+    val state = Rounds.hoisted(edges.select(col("src"), col("dst"))) { e =>
+      Rounds.hoisted(e.groupBy("src").agg(count(lit(1)).as("outd"))) { outd =>
+        opicRounds(e, outd, iters)
+      }
+    }
+    state.select(col("node").as("doc_id"),
+      round((col("hist") + col("cash")) / (iters + 1.0), 6).as("opic"))
+  }
+
+  /** [[opicFixed]]'s rounds over hoisted `e` (src, dst) and `outd`
+    * (src, outd); every round, the last included, is checkpointed, so
+    * the returned (node, cash, hist, n_nodes) state reads neither. */
+  private def opicRounds(e: DataFrame, outd: DataFrame, iters: Int): DataFrame = {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val nCount = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
@@ -267,7 +313,7 @@ object LinkGraph {
     // Per-round lineage truncation (r6): each round references `state` three
     // times (in-mass join, dangling agg, carry), so the unrolled plan grew
     // ~3× per round — see Rounds' scaladoc for the measured blowup.
-    val state = Rounds.iterate(state0, iters, checkpointLast = false) { state =>
+    Rounds.iterate(state0, iters) { state =>
       // mass arriving over edges: src's cash split equally per out-edge
       val inMass = e
         .join(outd, Seq("src"))
@@ -287,8 +333,6 @@ object LinkGraph {
           (col("hist") + col("cash")).as("hist"),
           col("n_nodes"))
     }
-    state.select(col("node").as("doc_id"),
-      round((col("hist") + col("cash")) / (iters + 1.0), 6).as("opic"))
   }
 
   /** Per-node degree audit: out-degree, in-degree, and the count of
@@ -470,28 +514,7 @@ object LinkGraph {
   def harmonicExact(edges: DataFrame, rounds: Int = 12): DataFrame = {
     require(rounds >= 1 && rounds <= 24, "rounds must be in [1,24]")
     val lcm = (1 to rounds).foldLeft(1L)((a, k) => a / gcd(a, k) * k)
-    // Persisted (r6): every BFS round's eager delta checkpoint
-    // re-instantiated the full upstream edge plan (for the host-grain
-    // entries that is the whole hostGraph rollup) — one evaluation,
-    // `rounds` cache reads.
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var dist = nodes.select(col("node").as("origin"), col("node"), lit(0).as("d"))
-      .localCheckpoint()
-    var frontier = dist
-    for (r <- 1 to rounds) {
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("origin"), col("dst").as("node")).distinct()
-        .join(dist, Seq("origin", "node"), "left_anti")
-        .select(col("origin"), col("node"), lit(r).as("d"))
-        .localCheckpoint()
-      dist = dist.unionAll(next).localCheckpoint()
-      frontier = next
-    }
-    dist.filter(col("d") > 0)
+    pairDistances(edges, rounds).filter(col("d") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_sources"), sum(expr(s"$lcm DIV d")).as("hnum"))
       .select(col("node").as("host"), col("n_sources"),
@@ -517,28 +540,7 @@ object LinkGraph {
     * construction (the op-49 exemption). */
   def neighborhoodFunction(edges: DataFrame, rounds: Int = 12): DataFrame = {
     require(rounds >= 1 && rounds <= 24, "rounds must be in [1,24]")
-    // Persisted (r6): every BFS round's eager delta checkpoint
-    // re-instantiated the full upstream edge plan (for the host-grain
-    // entries that is the whole hostGraph rollup) — one evaluation,
-    // `rounds` cache reads.
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var dist = nodes.select(col("node").as("origin"), col("node"), lit(0).as("d"))
-      .localCheckpoint()
-    var frontier = dist
-    for (r <- 1 to rounds) {
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("origin"), col("dst").as("node")).distinct()
-        .join(dist, Seq("origin", "node"), "left_anti")
-        .select(col("origin"), col("node"), lit(r).as("d"))
-        .localCheckpoint()
-      dist = dist.unionAll(next).localCheckpoint()
-      frontier = next
-    }
-    val perR = dist.filter(col("d") > 0)
+    val perR = pairDistances(edges, rounds).filter(col("d") > 0)
       .groupBy(col("d").as("r")).agg(count(lit(1)).as("n_new"))
     val radii = edges.sparkSession.range(1, rounds + 1)
       .select(col("id").cast("int").as("r"))
@@ -617,26 +619,29 @@ object LinkGraph {
     * Plan shape per round: one equi-join (neighbor label lookup) + one
     * (node, label) hash agg + one row_number window whose frame is a
     * node's DISTINCT NEIGHBOR LABELS (degree-bounded, never corpus-
-    * wide). Output: (doc_id, community, community_size). */
+    * wide). The symmetric neighbor table every round reads is hoisted
+    * (Rounds' hoist rule). Output: (doc_id, community, community_size). */
   def lpaCommunities(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, "rounds must be in [1,16]")
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    val nbr = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .unionAll(e.select(col("dst").as("node"), col("src").as("nbr")))
-      .distinct()
     val w = Window.partitionBy(col("node")).orderBy(desc("c"), asc("lab"))
     // Per-round lineage truncation (r6; integer labels — bit-exact under
-    // any evaluation order) — see Rounds' scaladoc.
-    val lab = Rounds.iterate(
-      nbr.select(col("node")).distinct()
-        .select(col("node"), col("node").as("lab")), rounds) { lab =>
-      nbr
-        .join(lab.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
-        .groupBy("node", "lab").agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("node"), col("lab"))
+    // any evaluation order) — see Rounds' scaladoc. Every round, the last
+    // included, is checkpointed, so `lab` no longer reads `nbr`.
+    val lab = Rounds.hoisted(e.select(col("src").as("node"), col("dst").as("nbr"))
+        .unionAll(e.select(col("dst").as("node"), col("src").as("nbr")))
+        .distinct()) { nbr =>
+      Rounds.iterate(
+        nbr.select(col("node")).distinct()
+          .select(col("node"), col("node").as("lab")), rounds) { lab =>
+        nbr
+          .join(lab.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
+          .groupBy("node", "lab").agg(count(lit(1)).as("c"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("node"), col("lab"))
+      }
     }
     val sizes = lab.groupBy("lab").agg(count(lit(1)).as("community_size"))
     lab.join(sizes, Seq("lab"))
@@ -770,37 +775,43 @@ object LinkGraph {
     * (|B_r| − |B_{r−1}|)/r from the per-round cardinality estimates.
     * Memory is O(V · 2^lgK) bytes total vs the exact mode's O(V·ball)
     * pairs. Estimate-valued (no oracle); the ±rel-err envelope vs
-    * [[harmonicExact]] is pinned in LinkGraphSpec. */
+    * [[harmonicExact]] is pinned in LinkGraphSpec. The distinct edge
+    * relation every round reads is hoisted (Rounds' hoist rule), and each
+    * superseded round's state is freed. */
   def hyperballHarmonic(edges: DataFrame, rounds: Int = 12, lgK: Int = 12): DataFrame = {
     require(rounds >= 1 && rounds <= 24, "rounds must be in [1,24]")
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var state = nodes
-      .groupBy("node")
-      .agg(hll_sketch_agg(col("node"), lit(lgK)).as("sk"))
-      .select(col("node"), col("sk"),
-        hll_sketch_estimate(col("sk")).as("b_prev"), lit(0.0).as("h"))
-      .localCheckpoint()
-    for (r <- 1 to rounds) {
-      // inbound ball: my sketch ∪ (in-neighbors' sketches)
-      val fromNbr = e
-        .join(state.select(col("node").as("src"), col("sk")), Seq("src"))
-        .select(col("dst").as("node"), col("sk"))
-      val merged = state.select(col("node"), col("sk"))
-        .unionByName(fromNbr)
-        .groupBy("node").agg(hll_union_agg(col("sk")).as("sk2"))
-      state = state.drop("sk")
-        .join(merged, Seq("node"))
-        .select(col("node"), col("sk2").as("sk"),
-          hll_sketch_estimate(col("sk2")).as("b_cur"),
-          (col("h") + (hll_sketch_estimate(col("sk2")) - col("b_prev")) /
-            lit(r.toDouble)).as("h"))
-        .withColumnRenamed("b_cur", "b_prev")
+    val last = Rounds.hoisted(edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct()) { e =>
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      var state = nodes
+        .groupBy("node")
+        .agg(hll_sketch_agg(col("node"), lit(lgK)).as("sk"))
+        .select(col("node"), col("sk"),
+          hll_sketch_estimate(col("sk")).as("b_prev"), lit(0.0).as("h"))
         .localCheckpoint()
+      for (r <- 1 to rounds) {
+        // inbound ball: my sketch ∪ (in-neighbors' sketches)
+        val fromNbr = e
+          .join(state.select(col("node").as("src"), col("sk")), Seq("src"))
+          .select(col("dst").as("node"), col("sk"))
+        val merged = state.select(col("node"), col("sk"))
+          .unionByName(fromNbr)
+          .groupBy("node").agg(hll_union_agg(col("sk")).as("sk2"))
+        val next = state.drop("sk")
+          .join(merged, Seq("node"))
+          .select(col("node"), col("sk2").as("sk"),
+            hll_sketch_estimate(col("sk2")).as("b_cur"),
+            (col("h") + (hll_sketch_estimate(col("sk2")) - col("b_prev")) /
+              lit(r.toDouble)).as("h"))
+          .withColumnRenamed("b_cur", "b_prev")
+          .localCheckpoint()
+        Rounds.free(state)
+        state = next
+      }
+      state
     }
-    state.select(col("node").as("host"), round(col("h"), 4).as("harmonic_est"))
+    last.select(col("node").as("host"), round(col("h"), 4).as("harmonic_est"))
   }
 
   /** SALSA authority scores (Lempel & Moran, WWW'00; Najork, SIGIR'07

@@ -31,6 +31,16 @@ import org.apache.spark.sql.DataFrame
   * variation the operators' documented 6-dp output rounding (q69
   * discipline) absorbs — and the integer-state loops (LPA, h-index) are
   * bit-exact under any order.
+  *
+  * Hoist rule ([[hoisted]]): a frame that every round reads but no round
+  * changes — LPA's neighbor table, OPIC's edges and out-degrees, a BFS's
+  * edge relation — is materialized ONCE before the loop. Left lazy, each
+  * round's eager checkpoint re-instantiates its whole upstream plan (for
+  * the registry's link-graph entries, the `linkEdges` scan and semi-join
+  * once per round, and Catalyst re-plans it every time). A hoisted frame
+  * may be freed as soon as nothing lazy still reads it: every round that
+  * reads it, the last one included, has been checkpointed, and the
+  * returned frame reads only those checkpoints.
   */
 object Rounds {
 
@@ -42,6 +52,16 @@ object Rounds {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** Run `body` over `invariant` materialized once (eager
+    * localCheckpoint), and free that storage when `body` returns or
+    * throws. `body`'s result must not read the hoisted frame lazily (see
+    * the hoist rule above): a plan over freed checkpoint blocks fails on
+    * its first action. */
+  def hoisted[A](invariant: DataFrame)(body: DataFrame => A): A = {
+    val h = invariant.localCheckpoint(true)
+    try body(h) finally free(h)
+  }
 
   /** Run `rounds` iterations of `body` over `initial`, materializing each
     * round eagerly and freeing the superseded one. Only frames created

@@ -1216,18 +1216,22 @@ object PipelineQueries {
     * slice of the SOURCE's text starting at token (dst mod 4)+1 — the
     * linking page chooses the phrasing, sliced deterministically so
     * different sources contribute different anchors to one target
-    * (fixture texts are ≥10 tokens, so every slice is full). */
+    * (fixture texts are ≥10 tokens, so every slice is full).
+    *
+    * Plan: ONE scan of the documents explodes each row's offset array
+    * ([1,2], plus [3..7] and [-1] where the modulus rules hold), and a
+    * second, id-only scan feeds the semi join — a constant-size plan
+    * for every entry and kernel round that embeds it. A null doc_id
+    * yields null targets, which the semi join drops. */
   private[graft] def linkEdges(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val ids = d.select(col("doc_id").as("dst"))
-    def shift(off: Long, filt: org.apache.spark.sql.Column) = d.filter(filt)
-      .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"), col("text"))
-    val all = lit(true)
-    val raw = shift(1, all)
-      .unionAll(shift(2, all))
-      .unionAll((3L to 7L).map(o => shift(o, col("doc_id") % 10 === 0)).reduce(_ unionAll _))
-      .unionAll(shift(-1, col("doc_id") % 25 === 0))
-    raw.join(ids, Seq("dst"), "left_semi")
+    val none = typedLit(Seq.empty[Long])
+    val off = concat(typedLit(Seq(1L, 2L)),
+      when(col("doc_id") % 10 === 0, typedLit(Seq(3L, 4L, 5L, 6L, 7L))).otherwise(none),
+      when(col("doc_id") % 25 === 0, typedLit(Seq(-1L))).otherwise(none))
+    d.select(col("doc_id").as("src"), explode(off).as("off"), col("text"))
+      .select(col("src"), (col("src") + col("off")).as("dst"), col("text"))
+      .join(d.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
       .select(col("src"), col("dst"),
         array_join(
           slice(split(col("text"), " "),

@@ -582,4 +582,68 @@ class LinkGraphSpec extends AnyFunSuite {
         s"host $h est ${est(h)} vs exact $ex")
     }
   }
+
+  /** The link-graph fixture by its definition, one row at a time: offsets
+    * 1, 2 for every doc, 3..7 when doc_id % 10 == 0 and −1 when
+    * doc_id % 25 == 0; a target must be an existing doc_id; the anchor is
+    * the 3-token slice of the source text at token (dst mod 4) + 1. */
+  private def referenceLinkEdges(docs: Seq[(Option[Long], String)]): Seq[(Long, Long, String)] = {
+    val ids = docs.flatMap(_._1).toSet
+    for {
+      (Some(d), text) <- docs
+      o <- Seq(1L, 2L) ++ (if (d % 10 == 0) 3L to 7L else Nil) ++ (if (d % 25 == 0) Seq(-1L) else Nil)
+      dst = d + o if ids(dst)
+    } yield {
+      val from = Math.floorMod(dst, 4L).toInt
+      (d, dst, text.split(" ", -1).slice(from, from + 3).mkString(" "))
+    }
+  }
+
+  private def linkEdgesOf(dir: String): Seq[(Long, Long, String)] =
+    graft.queries.PipelineQueries.linkEdges(spark, dir)
+      .as[(Long, Long, String)].collect().toSeq
+
+  test("linkEdges == the scalar offset-rule generator (sf0.001, every branch)") {
+    val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text")).as[(Option[Long], String)].collect().toSeq
+    val want = referenceLinkEdges(docs)
+    val offs = want.map(e => e._2 - e._1).toSet
+    assert(offs === Set(-1L, 1L, 2L, 3L, 4L, 5L, 6L, 7L), "every offset branch is exercised")
+    assert(linkEdgesOf(TestSpark.Sf0001).sorted === want.sorted)
+  }
+
+  test("linkEdges: a null doc_id contributes no edge; missing targets are dropped") {
+    val dir = java.nio.file.Files.createTempDirectory("linkedges").toString
+    val text = "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9"
+    val docs = Seq(Some(0L), Some(1L), Some(3L), Some(10L), Some(14L), None, Some(24L),
+      Some(25L), Some(50L), Some(51L)).map(d => (d, s"$text ${d.getOrElse(-1L)}"))
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val want = referenceLinkEdges(docs)
+    assert(want.exists(_._2 == 24L) && want.exists(e => e._1 == 50L && e._2 == 51L))
+    assert(linkEdgesOf(dir).sorted === want.sorted)
+  }
+
+  test("lpaCommunities and seedDepths leave only their result's storage, freed with it") {
+    val sc = spark.sparkContext
+    val edges = graft.queries.PipelineQueries.linkEdges(spark, TestSpark.Sf0001)
+    val seeds = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
+      .filter(col("doc_id") % 50 === 0).select(col("doc_id"))
+    def backing(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+    val kernels = Seq[() => org.apache.spark.sql.DataFrame](
+      () => LinkGraph.lpaCommunities(edges, rounds = 3),
+      () => LinkGraph.seedDepths(edges, seeds, rounds = 6))
+    for (kernel <- kernels) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = kernel()
+      assert(out.count() > 0)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.nonEmpty && left.subsetOf(backing(out)),
+        s"storage outliving the kernel: ${left -- backing(out)}")
+      graft.operators.Rounds.free(out)
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    }
+  }
 }

@@ -1,11 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.core.{Canonicalize, Constants, Fixtures}
 import graft.operators.{BatchResult, BloomSeen, Checkpoints, CrawlConfig, CrawlLoop, Scheduler}
@@ -713,6 +718,39 @@ class PlanShapeSpec extends AnyFunSuite {
         case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
         case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
       }.isEmpty, s"nested loop in the BFS/aggregate path:\n$plan")
+    }
+  }
+
+  test("linkEdges: one documents scan for the edges, one for the semi join's ids") {
+    withStaticPlans {
+      val fs = scans(graft.queries.PipelineQueries.linkEdges(spark, TestSpark.Sf0001))
+      assert(fs.nonEmpty && fs.size <= 2, s"${fs.size} scans")
+      assert(fs.forall(_.relation.location.rootPaths.forall(_.getName == "documents.parquet")))
+    }
+  }
+
+  test("LPA rounds read the hoisted neighbor table, never the documents scan") {
+    withStaticPlans {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      def has[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]) = p.collect(pf).nonEmpty
+      def scansDocs(p: SparkPlan) = has(p) { case s: FileSourceScanExec => s }
+      // a round's checkpoint is the one with the label-pick window
+      def rounds = plans.asScala.toSeq
+        .filter(p => has(p) { case w: org.apache.spark.sql.execution.window.WindowExec => w })
+      spark.listenerManager.register(listener)
+      try {
+        graft.operators.LinkGraph.lpaCommunities(
+          graft.queries.PipelineQueries.linkEdges(spark, TestSpark.Sf0001), rounds = 3)
+        // listener delivery is asynchronous (and in order: the hoist comes first)
+        eventually(timeout(Span(60, Seconds))) { assert(rounds.size === 3) }
+      } finally spark.listenerManager.unregister(listener)
+      rounds.foreach(p => assert(!scansDocs(p), s"an LPA round scans the documents:\n$p"))
+      assert(plans.asScala.exists(scansDocs), "the hoisted neighbor table reads the documents")
     }
   }
 }
