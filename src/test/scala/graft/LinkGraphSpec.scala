@@ -599,28 +599,22 @@ class LinkGraphSpec extends AnyFunSuite {
     }
   }
 
-  private def linkEdgesOf(dir: String): Seq[(Long, Long, String)] =
-    graft.queries.PipelineQueries.linkEdges(spark, dir)
-      .as[(Long, Long, String)].collect().toSeq
-
-  test("linkEdges == the scalar offset-rule generator (sf0.001, every branch)") {
-    val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
+  test("linkEdges == the scalar offset-rule generator (sf0.001; a corpus with a null doc_id)") {
+    def docsOf(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text")).as[(Option[Long], String)].collect().toSeq
-    val want = referenceLinkEdges(docs)
-    val offs = want.map(e => e._2 - e._1).toSet
-    assert(offs === Set(-1L, 1L, 2L, 3L, 4L, 5L, 6L, 7L), "every offset branch is exercised")
-    assert(linkEdgesOf(TestSpark.Sf0001).sorted === want.sorted)
-  }
-
-  test("linkEdges: a null doc_id contributes no edge; missing targets are dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("linkedges").toString
-    val text = "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9"
-    val docs = Seq(Some(0L), Some(1L), Some(3L), Some(10L), Some(14L), None, Some(24L),
-      Some(25L), Some(50L), Some(51L)).map(d => (d, s"$text ${d.getOrElse(-1L)}"))
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val want = referenceLinkEdges(docs)
-    assert(want.exists(_._2 == 24L) && want.exists(e => e._1 == 50L && e._2 == 51L))
-    assert(linkEdgesOf(dir).sorted === want.sorted)
+    // hub and back-edge sources, targets that do not exist, and a null id
+    val small = java.nio.file.Files.createTempDirectory("linkedges").toString
+    Seq(Some(0L), Some(1L), Some(3L), Some(5L), Some(10L), Some(14L), Some(16L), None,
+      Some(24L), Some(25L), Some(50L), Some(51L), Some(57L)).map(d => (d, s"t0 t1 t2 t3 t4 t5 t6 t7 t8 t9 ${d.getOrElse(-1L)}"))
+      .toDF("doc_id", "text").write.parquet(s"$small/documents.parquet")
+    for (dir <- Seq(TestSpark.Sf0001, small)) {
+      val want = referenceLinkEdges(docsOf(dir))
+      assert(want.map(e => e._2 - e._1).toSet === Set(-1L, 1L, 2L, 3L, 4L, 5L, 6L, 7L),
+        s"every offset branch is exercised in $dir")
+      val got = graft.queries.PipelineQueries.linkEdges(spark, dir)
+        .as[(Long, Long, String)].collect().toSeq
+      assert(got.sorted === want.sorted, dir)
+    }
   }
 
   test("lpaCommunities and seedDepths leave only their result's storage, freed with it") {
