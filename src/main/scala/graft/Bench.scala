@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, NullNode}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Fixtures
@@ -16,23 +18,68 @@ import graft.operators.CrawlLoop
   * /root/repo/bench_out.json) so downstream parsing never depends on sbt
   * log prefixes.
   *
-  * Scaling evidence (north_rule: N vs 4N executors → two parallelism levels
-  * in this sandbox): a DISCIPLINED fresh-JVM pair (local[2] vs local[8],
-  * spawned child processes — see ScalingBench.runOnceFreshJvm) runs inside
-  * this main and its efficiency is emitted under "scaling"; the full
-  * committed ladder lives in BENCH.md §3c.
+  * Scaling evidence (north_rule: N vs 4N executors) is not measured here:
+  * the "scaling" key embeds the committed ladders `bench_ladder.json` and
+  * `bench_pipeline_ladder.json` (methodology and host variance in BENCH.md
+  * section 3).
   *
   * SPARK_GRAFT_BENCH_ONLY=<regex> restricts the run to matching query names
   * (plus "crawl_e2e" if it matches) — local iteration aid.
   */
 object Bench {
-  /** A committed ladder JSON file as one compact line, to embed in the
-    * one-line bench JSON; "null" when the file is missing or not a JSON
-    * object. */
-  private[graft] def readLadder(path: String): String = try {
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(path))
-    if (tree != null && tree.isObject) tree.toString else "null"
-  } catch { case _: Throwable => "null" }
+  /** A committed ladder JSON file as a tree, to embed in the one-line bench
+    * JSON; JSON null when the file is missing or not a JSON object. */
+  private[graft] def readLadder(path: String): JsonNode = try {
+    val tree = new ObjectMapper().readTree(new java.io.File(path))
+    if (tree != null && tree.isObject) tree else NullNode.instance
+  } catch { case _: Throwable => NullNode.instance }
+
+  /** The bench record as one JSON line. `runs` holds every selected entry
+    * in run order with its walls, or None when its run threw: a failed
+    * entry is listed under "failed" and stays out of "queries",
+    * "query_walls" and the total. `crawl` is the flagship crawl's result
+    * and wall seconds when it ran; "queries" then carries its wall as
+    * "crawl_e2e" after each entry's min wall. */
+  private[graft] def benchLine(runs: Seq[(String, Option[Seq[Double]])],
+      crawl: Option[(CrawlLoop.RunResult, Double)], sfDir: String, cpus: Int,
+      ladder: JsonNode, pipelineLadder: JsonNode): String = {
+    val json = JsonNodeFactory.instance
+    val timed = runs.collect { case (k, Some(ws)) => k -> ws }
+    val queries = json.objectNode()
+    timed.foreach { case (k, ws) => queries.put(k, ws.min) }
+    crawl.foreach { case (_, sec) => queries.put("crawl_e2e", sec) }
+    val walls = json.objectNode()
+    timed.foreach { case (k, ws) => val a = walls.putArray(k); ws.foreach(a.add(_)) }
+    val failed = json.arrayNode()
+    runs.collect { case (k, None) => k }.foreach(failed.add(_))
+
+    val line = json.objectNode()
+    line.put("metric", "total")
+    line.put("value", timed.map(_._2.min).sum + crawl.fold(0.0)(_._2))
+    line.put("unit", "sec")
+    line.set[JsonNode]("queries", queries)
+    line.set[JsonNode]("query_walls", walls)
+    line.set[JsonNode]("failed", failed)
+    line.put("sf", sfDir)
+    line.put("cpus", cpus)
+    crawl.foreach { case (run, sec) =>
+      val o = line.putObject("crawl")
+      o.put("batches", run.batches)
+      o.put("urls_scheduled", run.scheduledTotal)
+      o.put("urls_fetched", run.fetchedTotal)
+      o.put("urls_parsed", run.parsedTotal)
+      o.put("wall_sec", sec)
+      o.put("throughput_urls_per_sec",
+        (run.scheduledTotal + run.fetchedTotal + run.parsedTotal) / sec)
+    }
+    val ref = line.putObject("scaling").putObject("ladder_ref")
+    ref.put("note", "committed N-to-4N ladders (bench_ladder.json, " +
+      "bench_pipeline_ladder.json); methodology and cross-round host variance " +
+      "in BENCH.md section 3")
+    ref.set[JsonNode]("committed", ladder)
+    ref.set[JsonNode]("committed_pipeline", pipelineLadder)
+    line.toString
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -57,27 +104,22 @@ object Bench {
     Fixtures.ensure(spark, sfDir)
 
     // Flagship: the end-to-end multi-batch crawl (scheduled+fetched+parsed).
-    val crawlJson = if (selected("crawl_e2e")) {
+    val crawl = if (selected("crawl_e2e")) {
       val cfg = graft.queries.CrawlQueries.fullCrawlConfig(sfDir)
         .copy(runTag = s"bench_${cpus}")
       val t0 = System.nanoTime()
       val run = CrawlLoop.run(spark, sfDir, cfg, fresh = true)
       val crawlSec = (System.nanoTime() - t0) / 1e9
-      val processed = run.scheduledTotal + run.fetchedTotal + run.parsedTotal
-      val throughput = processed / crawlSec
       // q11/q12 read this crawl's outputs instead of re-crawling.
       graft.queries.CrawlQueries.primeCrawl(sfDir, run.dir)
-      Some((crawlSec,
-        s""""crawl":{"batches":${run.batches},"urls_scheduled":${run.scheduledTotal},""" +
-          s""""urls_fetched":${run.fetchedTotal},"urls_parsed":${run.parsedTotal},""" +
-          s""""wall_sec":$crawlSec,"throughput_urls_per_sec":$throughput}"""))
+      Some((run, crawlSec))
     } else None
 
     // q11/q12 read a primed crawl's outputs. If they are selected while
     // crawl_e2e is filtered out, run (and prime) the crawl OUTSIDE their
     // timed window — otherwise q11 would silently time a full crawl run
     // (and a same-JVM caller could leave a stale primed run behind).
-    if (crawlJson.isEmpty &&
+    if (crawl.isEmpty &&
         (selected("q11_crawl_full") || selected("q12_host_log"))) {
       val run = CrawlLoop.run(spark, sfDir,
         graft.queries.CrawlQueries.fullCrawlConfig(sfDir).copy(runTag = s"bench_${cpus}"),
@@ -91,11 +133,10 @@ object Bench {
     // re-measure, indistinguishable from a real regression in the emitted
     // number. Entries slower than 2 s are re-run once; the headline
     // "queries" map carries the MIN, and "query_walls" carries every wall
-    // so a reader can audit the spread. (The crawl keeps its single run —
-    // it has its own per-phase trace via SPARK_GRAFT_CRAWL_TRACE, as
-    // q46/q50's CC rounds do via SPARK_GRAFT_CORPUS_TRACE.) An entry whose
-    // run throws is listed under "failed" and is never timed: it stays out
-    // of "queries", "query_walls" and the total.
+    // so a reader can audit the spread. (The crawl keeps its single run;
+    // perfbench's traced crawl_polite run is its per-layer view.) An entry
+    // whose run throws is listed under "failed" and is never timed: it
+    // stays out of "queries", "query_walls" and the total.
     val runs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
@@ -109,138 +150,12 @@ object Bench {
           Some(if (w1 > 2.0) Seq(w1, once()) else Seq(w1))
         } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None })
       }
-    val results = runs.collect { case (k, Some(ws)) => k -> ws }
-    val failed = runs.collect { case (k, None) => "\"" + k + "\"" }.mkString("[", ",", "]")
-    val crawlSec = crawlJson.map(_._1)
-    val qs = (results.map { case (k, ws) => k -> ws.min } ++ crawlSec.map("crawl_e2e" -> _))
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val walls = results
-      .map { case (k, ws) => "\"" + k + "\":" + ws.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2.min).sum + crawlSec.getOrElse(0.0)
-
-    def benchLine(scaling: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""query_walls":$walls,"failed":$failed,""" +
-        s""""sf":"$sfDir","cpus":$cpus""" +
-        crawlJson.map("," + _._2).getOrElse("") +
-        scaling + "}"
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
-    def writeOut(l: String): Unit =
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), l + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e") }
-    // Partial flush BEFORE the scaling pair: the R=1024 median-of-3 pair
-    // runs ~30 min, and a caller-side timeout there must not lose the
-    // query/crawl numbers. The final write below overwrites this line.
-    writeOut(benchLine(""))
-
-    // North-rule two-cluster-size evidence: a disciplined FRESH-JVM pair
-    // (N=2 vs 4N=8 threads on the XL replicated frontier, budget
-    // non-binding so the measured quantity is pipeline throughput; each
-    // level is a spawned child process with its own warmup pass). The
-    // committed full ladders (R=1024, both rounds) live in BENCH.md §3 and
-    // are cited alongside — single-host thread-scaling here carries large
-    // host-condition variance across rounds (BENCH.md §3d).
-    // Set SPARK_GRAFT_SKIP_SCALING=1 to skip.
-    val scalingJson =
-      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")) ""
-      else try {
-        // R=1024 deliberately: the pair must measure PIPELINE throughput,
-        // and the mega-batch carries a ~15-20 s serial floor (planning,
-        // broadcast builds, checkpoint commit) that at small R caps the
-        // 8-thread ratio by Amdahl regardless of engine quality — measured
-        // this round: R=128 → 0.35-0.54, R=512 → 0.75, R=1024 → 0.85 on
-        // the same engine (BENCH.md §3d). At cluster scale a batch carries
-        // minutes-to-hours of work and the same floor is noise, so the
-        // large-R regime is the one that answers the N→4N question.
-        // ~10 min per trial (2 levels × warmup+measured); SKIP_SCALING or
-        // SCALE_TRIALS=1 for local iteration.
-        val r = sys.env.getOrElse("SPARK_GRAFT_SCALE_R", "1024").toInt
-        val trials = sys.env.getOrElse("SPARK_GRAFT_SCALE_TRIALS", "3").toInt
-        val xlDir = ScalingBench.ensureXl(spark, sfDir, r)
-
-        // (a) median-of-N fresh-JVM engine pairs (single pairs measured a
-        // ±0.2 spread across identical runs — BENCH.md §3), under a
-        // wall-clock budget: at sf0.1 one R=1024 trial is ~15-25 min, and a
-        // caller-side timeout must never eat the whole bench. At least one
-        // trial always completes; a further trial starts only if the
-        // projected finish (elapsed + the longest trial so far) stays
-        // inside SPARK_GRAFT_SCALE_MAX_SEC.
-        val maxSec = sys.env.getOrElse("SPARK_GRAFT_SCALE_MAX_SEC", "2700").toDouble
-        val tScale0 = System.nanoTime()
-        def elapsedSec: Double = (System.nanoTime() - tScale0) / 1e9
-        val engine = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long, Double, Double)]
-        var longestTrial = 0.0
-        var i = 0
-        while (i < trials && (i == 0 || elapsedSec + longestTrial <= maxSec)) {
-          val t0 = elapsedSec
-          val (n2, s2) = ScalingBench.runOnceFreshJvm(2, xlDir, r)
-          val (n8, s8) = ScalingBench.runOnceFreshJvm(8, xlDir, r)
-          engine += ((n2, s2, n8, s8, (n8 / s8) / (4 * (n2 / s2))))
-          longestTrial = math.max(longestTrial, elapsedSec - t0)
-          i += 1
-        }
-        val engEff = ScalingBench.median(engine.map(_._5).toSeq)
-
-        // (b) SAME-SESSION host thread-scaling ceiling, same child-JVM
-        // harness: constant per-thread pure-CPU work, so eff = wall2/wall8.
-        // Own try/catch: a burn failure must not discard the (30-45 min of)
-        // engine-pair measurements already collected above.
-        val burnN = sys.env.getOrElse("SPARK_GRAFT_BURN_N", "4000000000").toLong
-        val host = try {
-          (1 to trials).map { _ =>
-            val w2 = ScalingBench.burnFreshJvm(2, burnN)
-            val w8 = ScalingBench.burnFreshJvm(8, burnN)
-            (w2, w8, w2 / w8)
-          }
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] host-ceiling burn failed (engine pair kept): $e")
-            Seq.empty
-        }
-        val hostEff = ScalingBench.median(host.map(_._3))
-
-        // (c) ceiling-normalized efficiency: what the engine achieves OF
-        // WHAT THIS HOST CAN GIVE between the two thread counts. On a real
-        // N→4N EXECUTOR scale-up each executor brings its own memory
-        // bandwidth, so the host ceiling (≈1.0 there) disappears and the
-        // normalized number is the cluster-relevant one.
-        val normEff = engEff / hostEff // NaN if the burn failed (host empty)
-
-        // NaN (empty/failed set) is not valid JSON — emit null instead.
-        def jnum(x: Double): String = if (x.isNaN || x.isInfinite) "null" else x.toString
-        val engineTrials = engine.map { case (n2, s2, n8, s8, e) =>
-          s"""{"local2":{"urls":$n2,"wall_sec":$s2},"local8":{"urls":$n8,"wall_sec":$s8},"efficiency":${jnum(e)}}"""
-        }.mkString("[", ",", "]")
-        val hostTrials = host.map { case (w2, w8, e) =>
-          s"""{"wall2_sec":$w2,"wall8_sec":$w8,"efficiency":${jnum(e)}}"""
-        }.mkString("[", ",", "]")
-
-        // ladder_ref cites the committed MEASURED artifacts (bench_ladder
-        // .json + bench_pipeline_ladder.json, both written by
-        // graft.ScalingBench) — never baked-in constants.
-        val ladder = readLadder(
-          sys.env.getOrElse("SPARK_GRAFT_LADDER_REF", "/root/repo/bench_ladder.json"))
-        val pipeLadder = readLadder(
-          sys.env.getOrElse("SPARK_GRAFT_PIPE_LADDER_REF", "/root/repo/bench_pipeline_ladder.json"))
-
-        s""","scaling":{"r":$r,"trials_requested":$trials,"trials_completed":${engine.length},""" +
-          s""""scale_max_sec":$maxSec,""" +
-          s""""mode":"median-of-${engine.length} fresh-JVM engine pairs + same-session host-ceiling burn pairs (same child-JVM harness; warmup inside each child; budget non-binding; trial count bounded by scale_max_sec)",""" +
-          s""""engine":{"trials":$engineTrials,"median_efficiency_2_to_8":${jnum(engEff)}},""" +
-          s""""host_ceiling":{"burn_per_thread":$burnN,"trials":$hostTrials,"median_efficiency_2_to_8":${jnum(hostEff)}},""" +
-          s""""efficiency_2_to_8":${jnum(engEff)},""" +
-          s""""normalized_efficiency_2_to_8":${jnum(normEff)},""" +
-          s""""ladder_ref":{"note":"committed measured ladder artifacts (graft.ScalingBench); methodology + cross-round host variance in BENCH.md section 3","committed":$ladder,"committed_pipeline":$pipeLadder}}"""
-      } catch {
-        // Never lose the whole bench line to a scaling-run failure.
-        case e: Throwable =>
-          System.err.println(s"[bench] scaling pair failed: $e")
-          ""
-      }
+    val line = benchLine(runs, crawl, sfDir, cpus.toInt,
+      readLadder("bench_ladder.json"), readLadder("bench_pipeline_ladder.json"))
     // File first (driver-parseable regardless of log wrappers), then stdout.
-    val line = benchLine(scalingJson)
-    writeOut(line)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
+    catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e") }
     println(line)
     spark.stop()
   }

@@ -1,72 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{Constants, Fixtures}
-import graft.operators.{CrawlConfig, CrawlLoop, Checkpoints}
 
-/** N-vs-4N scaling evidence for the north_rule's two-cluster-size criterion.
-  *
-  * No real cluster exists in this sandbox, so (per the driver instruction)
-  * the same job runs at two parallelism levels on identical input and the
-  * efficiency is throughput(4N) / (4 × throughput(N)).
-  *
-  * The measured job is ONE giant fetch-and-parse micro-batch over an
-  * XL frontier: the sf pages fixture replicated R times with distinct
-  * canonical urls (path suffix /v<i>) and shifted capture timestamps —
-  * politeness/host/skew structure preserved. The replication makes the
-  * parallel work large relative to the per-batch scheduling overhead that
-  * dominates at sf0.1 (Amdahl); at real cluster scale a batch carries hours
-  * of work and that overhead vanishes.
-  *
-  * Caveat recorded in BASELINE.md: threads on ONE host share a memory bus,
-  * so thread-scaling UNDERestimates executor-scaling on a real cluster where
-  * each added executor brings its own bandwidth; the uncontended low-thread
-  * ratio (2→8) is reported alongside 8→32.
-  */
+/** Replicated-corpus input for scaling-sized index and dedup work. The
+  * object keeps its name because perfbench's `index_live` workload calls
+  * [[ensureXlDocs]]. */
 object ScalingBench {
 
-  /** Best-effort eviction of superseded XL fixture caches: when a new cache
-    * dir is generated, sibling dirs for the SAME sf/r under an older naming
-    * scheme or FixtureVersion (multi-GB replicated corpora) would otherwise
-    * be stranded forever — one orphaned generation per version bump. Runs
-    * only on generation (same train-then-evict pattern as the q45 model
-    * cache); deletion is quiet so a concurrent reader can at worst retrigger
-    * its own regeneration. */
-  private def evictStaleXl(keep: String, sfName: String, r: Int): Unit = {
-    val root = java.nio.file.Paths.get(keep).getParent
-    if (root == null || !java.nio.file.Files.isDirectory(root)) return
-    // Stale = a pages-family cache for the same sf/r under a DIFFERENT
-    // FixtureVersion, or the legacy version-blind `xl_r<r>` key (rounds
-    // 1-2). The docs-family cache (`xl_docs_*`, derived from static
-    // testdata, unversioned) is never stale and never touched here.
-    def isStale(n: String): Boolean =
-      n == s"xl_r$r" ||
-        (n.startsWith("xl_v") && n.endsWith(s"_${sfName}_r$r"))
-    val stream = java.nio.file.Files.list(root)
-    try stream.toArray.map(_.toString)
-      .filter(p => p != keep && isStale(java.nio.file.Paths.get(p).getFileName.toString))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    finally stream.close()
-  }
-
-  /** Write a replicated XL documents table once (untimed input setup) for
-    * the PIPELINE scaling mode: each replica's tokens carry a `_<rep>`
-    * suffix, so token sets are DISJOINT across replicas — the near-dup
-    * structure (and the pair count) scales linearly with R instead of
-    * quadratically, and the measured work keeps the real op's profile
-    * (tokenize + 128-hash signatures + band join + exact verify). */
+  /** Write a replicated XL documents table once (untimed input setup):
+    * each replica's tokens carry a `_<rep>` suffix, so token sets are
+    * DISJOINT across replicas — the near-dup structure (and the pair
+    * count) scales linearly with R instead of quadratically, and work over
+    * it keeps the real op's profile (tokenize + 128-hash signatures + band
+    * join + exact verify). */
   def ensureXlDocs(spark: SparkSession, sfDir: String, r: Int): String = {
     // Keyed by sf basename: documents come straight from the (static)
-    // testdata, so no FixtureVersion component is needed — unlike ensureXl.
+    // testdata, so no FixtureVersion component is needed.
     val sfName = java.nio.file.Paths.get(sfDir).getFileName
     val xlDir = s"${Constants.workDir}/fixtures/xl_docs_${sfName}_r$r"
     val marker = java.nio.file.Paths.get(xlDir, "_ALL_DONE")
-    // Marker carries the SOURCE fingerprint (r6, same fix as
-    // Fixtures.ensure): a replicated cache is only trusted for the exact
-    // testdata it was built from.
-    val fp = graft.core.Fixtures.sourceFingerprint(sfDir)
+    // Marker carries the SOURCE fingerprint (same rule as Fixtures.ensure):
+    // a replicated cache is only trusted for the exact testdata it was
+    // built from.
+    val fp = Fixtures.sourceFingerprint(sfDir)
     if (!java.nio.file.Files.exists(marker) ||
         java.nio.file.Files.readString(marker) != fp) {
       val suffix = udf { (text: String, rep: Int) =>
@@ -84,397 +43,5 @@ object ScalingBench {
       java.nio.file.Files.writeString(marker, fp)
     }
     xlDir
-  }
-
-  /** One pipeline mega-job (MinHash+LSH near-dup dedup over the XL docs)
-    * at `cpus` threads → (docs processed, wall sec). Warmup pass inside
-    * the JVM, then the measured pass — same discipline as [[runOnce]]. */
-  def runOncePipeline(cpus: Int, xlDir: String): (Long, Double) = {
-    val spark = newSession(cpus)
-    try {
-      val docs = spark.read.parquet(s"$xlDir/documents.parquet")
-      graft.ml.Dedup.minhashPairs(docs, threshold = 0.95).count() // warmup
-      val n = docs.count()
-      val t0 = System.nanoTime()
-      graft.ml.Dedup.minhashPairs(docs, threshold = 0.95).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (n, sec)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
-
-  /** Write the replicated XL pages fixture once (untimed input setup).
-    * The cache key includes FixtureVersion: the source pages fixture
-    * changes when the generator does (e.g. v2→v3 added the ticker metas),
-    * and a version-blind `xl_r$r` marker would silently replay the OLD
-    * corpus in every scaling run after a bump while the same bench line's
-    * crawl/query numbers used the new one. (The committed cross-round
-    * ladder series predates this key and is self-consistent — every round
-    * measured the same cached v2-derived XL input.) */
-  def ensureXl(spark: SparkSession, sfDir: String, r: Int): String = {
-    val fixDir = Fixtures.ensure(spark, sfDir)
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName
-    val xlDir = s"${Constants.workDir}/fixtures/xl_v${Constants.FixtureVersion}_${sfName}_r$r"
-    val marker = java.nio.file.Paths.get(xlDir, "_ALL_DONE")
-    // Marker carries the PARENT FIXTURE dir's fingerprint (r6): the parent
-    // regenerates whenever the testdata changes, so a stale replicated
-    // cache can no longer outlive a testdata regeneration.
-    val fp = graft.core.Fixtures.sourceFingerprint(fixDir)
-    if (!java.nio.file.Files.exists(marker) ||
-        java.nio.file.Files.readString(marker) != fp) {
-      val pages = spark.read.parquet(s"$fixDir/pages.parquet")
-      pages
-        .withColumn("rep", explode(sequence(lit(0), lit(r - 1))))
-        .select(
-          concat(col("url"), lit("/v"), col("rep")).as("url"),
-          timestamp_seconds(unix_timestamp(col("warc_ts")) + col("rep")).as("warc_ts"),
-          col("html"), col("text"), col("lang"))
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$xlDir/pages.parquet")
-      // dims unchanged
-      for (t <- Seq("seeds", "robots", "source_weights", "budgets"))
-        spark.read.parquet(s"$fixDir/$t.parquet")
-          .write.mode("overwrite").parquet(s"$xlDir/$t.parquet")
-      java.nio.file.Files.writeString(marker, fp)
-      // New generation committed — release superseded multi-GB caches.
-      evictStaleXl(xlDir, sfName.toString, r)
-    }
-    xlDir
-  }
-
-  private def newSession(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
-      // 4× cores (uniform policy across levels; SPARK_GRAFT_SHUFFLE_PARTS
-      // overrides). Rounds 1-4 ran partitions == cores, which gives a
-      // skewed/straggling reduce task ZERO rebalance slack — one 17 s task
-      // stalled a whole 32-slot stage in the round-5 trace. At 4× cores AQE
-      // coalesces evenly and a straggler costs 1/4 of a wave, worth +44%
-      // local[32] throughput on the same engine (BENCH.md §6d).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", (4 * cpus).toString))
-      // Scan-side granularity, the §6d lesson applied to INPUT splits: the
-      // XL pages parquet (7.8 GB in 32 files) yields only 64 splits at the
-      // 128 MB default — 2 waves on 32 cores, so one heavy parse partition
-      // (max task 34 s in the round-5 stage trace, stages 183/188) strands
-      // 31 slots for half a wave. 32 MB splits give ~8 waves at local[32];
-      // narrow stages lose nothing (split planning is O(files)).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** One XL mega-batch at `cpus` threads → (urls processed, wall sec). */
-  def runOnce(cpus: Int, xlDir: String): (Long, Double) = {
-    val spark = newSession(cpus)
-    // SPARK_GRAFT_SCALE_TRACE=1: print job wall-clock boundaries so driver-
-    // serial gaps (time between jobs) can be measured offline.
-    if (sys.env.get("SPARK_GRAFT_SCALE_TRACE").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          System.err.println(s"[trace] job=${js.jobId} start=${js.time}")
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          System.err.println(s"[trace] job=${je.jobId} end=${je.time}")
-      })
-    }
-    // SPARK_GRAFT_SCALE_TRACE=stage: per-stage scaling profile — wall,
-    // Σ task time, max task, task count. `par` = Στask/wall is the stage's
-    // ACHIEVED parallelism; a stage whose par ≪ cores at local[32] but not
-    // at local[8] is an 8→32 bottleneck (too few/skewed partitions); a
-    // stage whose Στask itself grows with cores is contention (memory
-    // bandwidth / GC). The round-5 crawl-leg diagnosis ran on this.
-    if (sys.env.get("SPARK_GRAFT_SCALE_TRACE").contains("stage")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val taskSum = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val taskMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        // Byte totals identify WHICH relation a stage carries when the
-        // callsite is AQE-mangled (html-fat shuffles are GBs; rank/key
-        // projections are MBs) — the round-5 straggler attribution.
-        private val bytesIn = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val bytesSh = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val bytesWr = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val d = te.taskInfo.duration
-          taskSum.merge(te.stageId, d, (a, b) => a + b)
-          taskMax.merge(te.stageId, d, (a, b) => math.max(a, b))
-          val tm = te.taskMetrics
-          if (tm != null) {
-            bytesIn.merge(te.stageId, tm.inputMetrics.bytesRead, (a, b) => a + b)
-            bytesSh.merge(te.stageId, tm.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
-            bytesWr.merge(te.stageId, tm.shuffleWriteMetrics.bytesWritten, (a, b) => a + b)
-          }
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (for (s <- si.submissionTime; e <- si.completionTime)
-            yield (e - s) / 1000.0).getOrElse(0.0)
-          val sum = taskSum.getOrDefault(si.stageId, 0L) / 1000.0
-          val mx = taskMax.getOrDefault(si.stageId, 0L) / 1000.0
-          if (wall >= 0.2) { // skip noise stages
-            // first graft-frame of the callsite beats the AQE-mangled name
-            val site = si.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("ScalingBench"))
-              .getOrElse(si.name.takeWhile(_ != '\n')).trim.take(90)
-            def mb(m: java.util.concurrent.ConcurrentHashMap[Int, Long]) =
-              m.getOrDefault(si.stageId, 0L) / 1e6
-            System.err.println(
-              f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d wall=$wall%7.2f " +
-                f"sum=$sum%8.2f max=$mx%7.2f par=${if (wall > 0) sum / wall else 0.0}%5.1f " +
-                f"in=${mb(bytesIn)}%8.1fMB shr=${mb(bytesSh)}%8.1fMB shw=${mb(bytesWr)}%8.1fMB " +
-                s"at=$site")
-          }
-        }
-      })
-    }
-    try {
-      // html never cached; everything flows scan → shuffle → parse once.
-      val cfg = CrawlConfig(
-        deltaPerBatchSec = 365L * 24 * 3600, budgetScale = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET", "2000").toInt,
-        maxBatches = 1, cacheInputs = false, localTopKSalt = 16, compactState = false, saltParse = false,
-        runTag = s"scaling_$cpus")
-      // Warmup pass (JIT + page cache), then the measured pass on fresh state.
-      CrawlLoop.runWithFixtures(spark, xlDir, cfg, fresh = true)
-      val t0 = System.nanoTime()
-      val run = CrawlLoop.runWithFixtures(spark, xlDir, cfg, fresh = true)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (run.scheduledTotal + run.fetchedTotal + run.parsedTotal, sec)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // Host-ceiling burn: the same host's OWN thread-scaling limit, measured
-  // by the SAME child-JVM harness as the engine pair, in the SAME session.
-  // Round 1/2 showed the virtualized host's pure-CPU 2→8 ratio drifting
-  // 0.73 → ~0.95 between sessions — normalizing an engine ratio by a STALE
-  // ceiling is meaningless, so the bench measures both back-to-back and
-  // emits engine_eff / host_eff (BENCH.md §3).
-  // ---------------------------------------------------------------------
-
-  @volatile private var burnSink = 0L // defeats dead-code elimination
-
-  /** Cache-resident SplitMix64 kernel: no allocation, no memory traffic. */
-  private def burnKernel(n: Long, seed: Long): Long = {
-    var z = 0x9e3779b97f4a7c15L ^ seed
-    var acc = 0L
-    var i = 0L
-    while (i < n) {
-      z += 0x9e3779b97f4a7c15L
-      var x = z
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      acc ^= x ^ (x >>> 31)
-      i += 1
-    }
-    acc
-  }
-
-  /** `threads` Java threads × `perThread` kernel iterations (constant
-    * per-thread work, so efficiency(2→8) = wall₂/wall₈). Returns wall sec. */
-  def burn(threads: Int, perThread: Long): Double = {
-    burnSink ^= burnKernel(math.min(perThread, 100000000L), 1L) // JIT warmup
-    val accs = new java.util.concurrent.atomic.AtomicLong()
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { i =>
-      val t = new Thread(() => accs.addAndGet(burnKernel(perThread, i + 2L)))
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    burnSink ^= accs.get()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Burn in a fresh child JVM (same harness discipline as the engine
-    * levels); returns wall sec. */
-  def burnFreshJvm(threads: Int, perThread: Long): Double = {
-    val classes = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
-    val cmd = Seq("java", "-cp", s"$classes:/opt/spark/jars/*", "-Xmx1g",
-      "graft.ScalingBench", "burn", threads.toString, perThread.toString)
-    val pb = new ProcessBuilder(cmd: _*)
-    // stderr to a file (same discipline as runOnceFreshJvm): an un-drained
-    // stderr pipe deadlocks both processes past 64 KB, and on failure the
-    // diagnostics live there, not on stdout.
-    val errFile = java.io.File.createTempFile(s"graft-burn-$threads-", ".stderr")
-    errFile.deleteOnExit()
-    pb.redirectError(errFile)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val rc = p.waitFor()
-    """"burn_wall_sec":([0-9.eE+-]+)""".r.findFirstMatchIn(out) match {
-      case Some(m) => m.group(1).toDouble
-      case None =>
-        val err = try java.nio.file.Files.readString(errFile.toPath).takeRight(2000)
-          catch { case _: Throwable => "<unreadable>" }
-        sys.error(s"burn child (t=$threads) rc=$rc produced no line: $out; stderr tail: $err")
-    }
-  }
-
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) Double.NaN
-    else if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-  }
-
-  /** Run one level in a FRESH child JVM — the disciplined shape for the
-    * N-vs-4N pair: no shared JIT profile, heap, or GC history between
-    * levels (the in-JVM back-to-back pair measured up to 2× noise, BENCH.md
-    * §3b). The child is this same main restricted to one level via
-    * SPARK_GRAFT_SCALE_LEVELS; its JSON line is parsed from stdout. */
-  def runOnceFreshJvm(cpus: Int, xlDir: String, r: Int): (Long, Double) = {
-    val classes = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq("java", "-cp", s"$classes:/opt/spark/jars/*",
-      "-Xmx24g", "-XX:+UseParallelGC") ++ addOpens ++
-      Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "graft.ScalingBench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-    // stderr to a file: reading stdout to EOF while the child's un-drained
-    // stderr pipe fills (Spark startup INFO + run WARNs can exceed the 64 KB
-    // pipe buffer) would deadlock both processes.
-    val errFile = java.io.File.createTempFile(s"graft-scale-$cpus-", ".stderr")
-    errFile.deleteOnExit()
-    pb.redirectError(errFile)
-    pb.environment().put("SPARK_GRAFT_SCALE_LEVELS", cpus.toString)
-    pb.environment().put("SPARK_GRAFT_SCALE_R", r.toString)
-    // The child must run its (single) level IN-PROCESS — inheriting
-    // SCALE_FRESH from a fresh-ladder parent would recurse forever.
-    pb.environment().remove("SPARK_GRAFT_SCALE_FRESH")
-    // Parse-dominated regime by default (budget non-binding): the measured
-    // quantity must be pipeline throughput, not the politeness cap — a
-    // binding budget fixes the fetch/parse work regardless of R and the
-    // pair degenerates into measuring the scan+dedup prelude (BENCH.md §3d).
-    pb.environment().put("SPARK_GRAFT_SCALE_BUDGET",
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET", "32000"))
-    pb.redirectErrorStream(false)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val rc = p.waitFor()
-    val re = s""""local$cpus":\\{"(?:urls|docs)":(\\d+),"wall_sec":([0-9.eE+-]+)""".r
-    re.findFirstMatchIn(out) match {
-      case Some(m) => (m.group(1).toLong, m.group(2).toDouble)
-      case None => sys.error(s"child (local[$cpus]) rc=$rc produced no scaling line: $out")
-    }
-  }
-
-  /** Standalone runner: SPARK_GRAFT_SCALE_R (default 64), prints one JSON.
-    * `burn <threads> <perThread>` runs the host-ceiling kernel instead
-    * (no Spark) — the child mode of [[burnFreshJvm]]. */
-  def main(args: Array[String]): Unit = {
-    if (args.length >= 3 && args(0) == "burn") {
-      val wall = burn(args(1).toInt, args(2).toLong)
-      println(s"""{"burn_threads":${args(1)},"burn_per_thread":${args(2)},"burn_wall_sec":$wall}""")
-      return
-    }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val r = sys.env.getOrElse("SPARK_GRAFT_SCALE_R", "64").toInt
-    // SPARK_GRAFT_SCALE_MODE=pipeline: the measured job is the MinHash+LSH
-    // dedup over replicated documents (the training-pipeline flagship)
-    // instead of the crawl mega-batch — same fresh-JVM/warmup discipline,
-    // so the N-vs-4N evidence covers the pipeline operator family too.
-    // Child JVMs inherit the env, so the mode propagates through
-    // runOnceFreshJvm unchanged.
-    val pipeline = sys.env.get("SPARK_GRAFT_SCALE_MODE").contains("pipeline")
-    val prep = newSession(sys.env.getOrElse("SPARK_GRAFT_SCALE_PREP_CPUS", "8").toInt)
-    val xlDir = if (pipeline) ensureXlDocs(prep, sfDir, r) else ensureXl(prep, sfDir, r)
-    prep.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // SPARK_GRAFT_SCALE_PREP_ONLY=1: generate/refresh the XL fixture cache
-    // and exit — lets a long ladder campaign pay the (untimed anyway) input
-    // build OUTSIDE the quiet measurement window it is trying to catch.
-    if (sys.env.get("SPARK_GRAFT_SCALE_PREP_ONLY").contains("1")) {
-      println(s"""{"metric":"scaling-prep","r":$r,"xl_dir":"$xlDir"}""")
-      return
-    }
-
-    val levels = sys.env.getOrElse("SPARK_GRAFT_SCALE_LEVELS", "2,8,32")
-      .split(",").map(_.trim.toInt).toSeq
-    // SPARK_GRAFT_SCALE_FRESH=1: run each level in its own child JVM (the
-    // disciplined pair shape) so a multi-level invocation can emit a
-    // fresh-JVM ladder artifact in one go.
-    val fresh = sys.env.get("SPARK_GRAFT_SCALE_FRESH").contains("1")
-    // SPARK_GRAFT_SCALE_BURN=1: bracket the ladder with the pure-CPU
-    // host-ceiling burn at EVERY measured level, before and after, and
-    // embed both in the artifact — a ladder self-certifies its window
-    // (round-5 campaign discipline: the host ceiling drifts WITHIN one
-    // ladder's ~10 minutes, so a single same-session ceiling is not
-    // enough to normalize against; adopt a ladder only when the brackets
-    // agree). Fresh child JVM per burn, same harness as the engine legs.
-    val doBurn = sys.env.get("SPARK_GRAFT_SCALE_BURN").contains("1")
-    val burnN = sys.env.getOrElse("SPARK_GRAFT_BURN_N", "4000000000").toLong
-    def burnAll(): Seq[(Int, Double)] =
-      if (!doBurn) Seq.empty else levels.map(c => (c, burnFreshJvm(c, burnN)))
-    def burnJson(tag: String, walls: Seq[(Int, Double)]): String =
-      if (walls.isEmpty) ""
-      else {
-        def w(c: Int) = walls.find(_._1 == c).map(_._2)
-        // Constant per-thread work → ceiling(a→b) = wallₐ/wallᵦ, one per
-        // adjacent level pair (2→8, 8→32 on the default ladder).
-        val effs = levels.sliding(2).flatMap {
-          case Seq(a, b) => for (wa <- w(a); wb <- w(b))
-            yield s""""eff_${a}_to_${b}":${wa / wb}"""
-          case _ => None // single-level ladder: no pair
-        }.mkString(",")
-        val effPart = if (effs.isEmpty) "" else s",$effs"
-        s""","$tag":{${walls.map { case (c, s) => s""""wall$c":$s""" }.mkString(",")}$effPart}"""
-      }
-    val burnPre = burnAll()
-    val results = levels.map { c =>
-      val (n, s) =
-        if (fresh) runOnceFreshJvm(c, xlDir, r)
-        else if (pipeline) runOncePipeline(c, xlDir)
-        else runOnce(c, xlDir)
-      (c, n, s, n / s)
-    }
-    val burnPost = burnAll()
-    val itemKey = if (pipeline) "docs" else "urls"
-    val parts = results.map { case (c, n, s, tp) =>
-      s""""local$c":{"$itemKey":$n,"wall_sec":$s,"throughput":$tp}"""
-    }
-    def tp(c: Int): Option[Double] = results.find(_._1 == c).map(_._4)
-    val eff28 = for (a <- tp(2); b <- tp(8)) yield b / (4 * a)
-    val eff832 = for (a <- tp(8); b <- tp(32)) yield b / (4 * a)
-    val line =
-      s"""{"metric":"scaling","mode":"${if (pipeline) "pipeline-minhash" else "crawl"}","r":$r,${parts.mkString(",")}""" +
-        eff28.map(e => s""","efficiency_2_to_8":$e""").getOrElse("") +
-        eff832.map(e => s""","efficiency_8_to_32":$e""").getOrElse("") +
-        burnJson("host_burn_pre", burnPre) + burnJson("host_burn_post", burnPost) + "}"
-    println(line)
-    // Commit the ladder as an artifact so Bench's ladder_ref cites MEASURED
-    // data instead of hardcoded historical constants (round-2 ADVICE).
-    if (levels.length >= 2) {
-      val defaultOut =
-        if (pipeline) "/root/repo/bench_pipeline_ladder.json"
-        else "/root/repo/bench_ladder.json"
-      val out = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT", defaultOut)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-      catch { case e: Throwable => System.err.println(s"[scaling] could not write $out: $e") }
-    }
   }
 }

@@ -3,6 +3,8 @@ package graft.core
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,26 +42,27 @@ final case class MediaRow(
   */
 object Fixtures {
 
-  /** Ensure fixtures exist for `sfDir`; returns the fixture directory. */
-  /** Cheap content fingerprint of the SOURCE data dir (file names + sizes
-    * + mtimes — no Spark job): stored inside the `_ALL_DONE` marker so a
-    * cached fixture is only trusted for the exact testdata it was derived
-    * from (r6 fix — a long-lived sandbox kept serving a fixture cache
-    * built from a PREVIOUS round's regenerated testdata: same shape,
-    * different doc→source draw, which would silently poison any
-    * correctness gate run in the same container). */
-  private[graft] def sourceFingerprint(sfDir: String): String =
-    scala.util.Using.resource(Files.list(Paths.get(sfDir))) { s =>
-      val it = s.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val p = it.next()
-        if (Files.isRegularFile(p))
-          buf += s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-      }
-      buf.sorted.mkString("|")
-    }
+  /** Cheap content fingerprint of a source file, or of the regular files
+    * directly inside a source directory (file names + sizes + mtimes — no
+    * Spark job). Caches store it in their `_ALL_DONE` marker and are only
+    * trusted for the exact input they were derived from: regenerated
+    * testdata of the same shape but a different doc→source draw would
+    * otherwise be served a stale fixture and silently poison any
+    * correctness gate. A directory without a regular file fails, since
+    * its fingerprint would be empty and never change. */
+  private[graft] def sourceFingerprint(path: String): String = {
+    val p = Paths.get(path)
+    val files =
+      if (Files.isDirectory(p))
+        scala.util.Using.resource(Files.list(p))(
+          _.iterator.asScala.filter(Files.isRegularFile(_)).toList)
+      else List(p)
+    require(files.nonEmpty, s"no file to fingerprint in $path")
+    files.map(f => s"${f.getFileName}:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
+      .sorted.mkString("|")
+  }
 
+  /** Ensure fixtures exist for `sfDir`; returns the fixture directory. */
   def ensure(spark: SparkSession, sfDir: String): String = synchronized {
     val sfName = Paths.get(sfDir).getFileName.toString
     val dir = s"${Constants.workDir}/fixtures/v${Constants.FixtureVersion}/$sfName"

@@ -60,28 +60,9 @@ object Corpus {
     * descendants: Rastogi et al. "hash-to-min", ICDE 2013, and Kiveris et
     * al. "Connected Components in MapReduce and Beyond", SoCC 2014) —
     * re-expressed here as Catalyst joins/aggregations, original code.
-    */
-  /** Best-effort release of the storage behind a localCheckpoint'ed frame
-    * (`Dataset.unpersist` does not reach checkpoint storage — the persisted
-    * RDD sits behind the LogicalRDD leaf). Superseded label tables would
-    * otherwise accumulate one corpus-sized cached copy per round until the
-    * ContextCleaner happens to GC them. */
-  /** SPARK_GRAFT_CORPUS_TRACE=1 → per-round CC wall times on stderr (the
-    * q46/q50 analogue of CrawlLoop's crawl trace: lets a bench reader
-    * attribute a slow wall to specific rounds instead of guessing between
-    * host contention and a plan regression). */
-  private val trace = sys.env.get("SPARK_GRAFT_CORPUS_TRACE").contains("1")
-  private def timed[A](name: String)(f: => A): A =
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[corpus-trace] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
-  /** See object doc. `checkpointDir = None` (default) truncates per-round
-    * lineage with memory-backed `localCheckpoint` — fastest, and fine in
+    *
+    * `checkpointDir = None` (default) truncates per-round lineage with
+    * memory-backed `localCheckpoint` — fastest, and fine in
     * local mode or for jobs short enough to simply re-run, but NOT
     * fault-tolerant: on a real cluster an executor loss mid-iteration kills
     * the job (lineage is gone, no recompute path). `checkpointDir =
@@ -117,7 +98,7 @@ object Corpus {
     var converged = false
     var iter = 0
     try {
-      while (!converged && iter < maxIter) timed(s"cc round ${iter + 1}") {
+      while (!converged && iter < maxIter) {
         // Hook: candidate label = min over own + incoming neighbor labels.
         val fromNeighbors = sym
           .join(labels.withColumnRenamed("id", "src"), Seq("src"))
@@ -547,7 +528,7 @@ object Corpus {
     // release the corpus-sized cache before returning — the returned frame
     // is self-contained.
     val shingled = Dedup.shingleFrame(docs).persist()
-    try timed("curate pipeline") {
+    try {
       val q = TextAnalysis.quality(docs).select(col("doc_id"), col("n_tokens"))
       val contaminated = decontaminateFrom(shingled, evalPred).select("doc_id")
       val dupLosers =

@@ -52,23 +52,12 @@ object CrawlLoop {
   final case class RunResult(dir: String, batches: Long, articleCount: Long,
       scheduledTotal: Long, fetchedTotal: Long, parsedTotal: Long)
 
-  /** SPARK_GRAFT_CRAWL_TRACE=1 → per-phase driver timings on stderr. */
-  private val trace = sys.env.get("SPARK_GRAFT_CRAWL_TRACE").contains("1")
-
   /** Host-universe bound for the distributed per-host rank (see
     * runWithFixtures): its two-phase driver partials are parts × hosts
     * rows, so the strategy is only selected when the budgets dim is small
     * (the consolidated-publisher regime); above it the per-host window
     * already spreads across cores on host cardinality alone. */
   val DistHostRankMaxHosts: Long = 1024L
-  private[operators] def timed[A](name: String)(f: => A): A =
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[crawl-trace] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
 
   def seedFrontier(spark: SparkSession, fixDir: String): DataFrame =
     spark.read.parquet(s"$fixDir/seeds.parquet")
@@ -179,10 +168,9 @@ object CrawlLoop {
     while (!done && k < cfg.maxBatches) {
       k += 1
       val seen = seenInputs(spark, dir, k - 1, cfg)
-      val r = timed(s"b$k runBatch")(
-        Scheduler.runBatch(spark, pages, frontier, seen.exact, seen.shards,
-          robots, weights, budgets, k, articleCount, seen.cfg, scheduledBound,
-          distHostRank, seen.recent))
+      val r = Scheduler.runBatch(spark, pages, frontier, seen.exact, seen.shards,
+        robots, weights, budgets, k, articleCount, seen.cfg, scheduledBound,
+        distHostRank, seen.recent)
 
       // Batch counters ride the write jobs as observe() metrics (op 21's
       // mechanism): the fetch_log/host_log write actions collect them as a
@@ -197,10 +185,10 @@ object CrawlLoop {
       val hostLogObserved = r.hostLog.observe(hostObs,
         sum(col("urls_scheduled")).as("scheduled"))
 
-      timed(s"b$k writeState")(Checkpoints.writeState(spark, dir, k,
+      Checkpoints.writeState(spark, dir, k,
         r.frontier, r.seenDelta, None,
         r.articles, fetchLogObserved, hostLogObserved,
-        compact = cfg.compactState))
+        compact = cfg.compactState)
       // The writes are complete, so the observations resolve immediately;
       // an empty batch sums to NULL → 0.
       def obsLong(o: org.apache.spark.sql.Observation, key: String): Long =
@@ -223,16 +211,15 @@ object CrawlLoop {
       // re-triggers it and overwrites). The compaction's shard table is
       // built here, and only here.
       if (cfg.seenCompactEvery > 0 && k % cfg.seenCompactEvery == 0)
-        timed(s"b$k compactSeen")(
-          Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery,
-            Option.when(cfg.useBloom)(BloomSeen.buildShards(_))))
+        Checkpoints.compactSeen(spark, dir, k, cfg.seenCompactEvery,
+          Option.when(cfg.useBloom)(BloomSeen.buildShards(_)))
       r.cached.foreach(_.unpersist())
 
       // Re-read committed state (truncates lineage across batches).
       frontier = Checkpoints.readSnap(spark, dir, k, "frontier")
 
       val hwmDone = Constants.EPOCH.getEpochSecond + k * cfg.deltaPerBatchSec > maxTsSec
-      done = hwmDone && timed(s"b$k isEmpty")(frontier.isEmpty)
+      done = hwmDone && frontier.isEmpty
     }
     if (cfg.cacheInputs) pages.unpersist()
     RunResult(dir, k, articleCount, scheduledTotal, fetchedTotal, parsedTotal)

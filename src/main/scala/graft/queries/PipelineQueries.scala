@@ -33,29 +33,12 @@ object PipelineQueries {
     pairsMemo.getOrElseUpdate((s, dir, threshold),
       Dedup.ngramJaccardPairs(docs(s, dir), threshold).cache())
 
-  /** Cheap content fingerprint of a parquet file/dir (names+sizes+mtimes,
-    * no Spark job) — cache keys derived from it invalidate when the input
-    * is regenerated, instead of silently reusing stale artifacts. */
-  private def dirFingerprint(p: String): String = {
-    import java.nio.file.{Files, Paths}
-    val path = Paths.get(p)
-    val entries: Array[String] =
-      if (Files.isDirectory(path)) {
-        val stream = Files.list(path) // must be closed: DirectoryStream-backed
-        try stream.toArray.map(_.toString).sorted.map { f =>
-          val fp = Paths.get(f)
-          s"${fp.getFileName}:${Files.size(fp)}:${Files.getLastModifiedTime(fp).toMillis}"
-        } finally stream.close()
-      } else Array(s"${path.getFileName}:${Files.size(path)}:${Files.getLastModifiedTime(path).toMillis}")
-    Integer.toHexString(scala.util.hashing.MurmurHash3.arrayHash(entries))
-  }
-
   /** Fingerprint-keyed artifact cache under the work dir — the ONE
     * definition of the q45/q57 pattern. The artifact lives at
-    * `models/<base>_<fingerprint(inputFile)>`, so a regenerated input
-    * under the same basename rebuilds instead of silently reusing a
-    * stale artifact. On a miss, `build(path)` writes it and commits
-    * last via its own marker (checked by `committed`); THEN superseded
+    * `models/<base>_<hash of Fixtures.sourceFingerprint(inputFile)>`, so
+    * a regenerated input under the same basename rebuilds instead of
+    * silently reusing a stale artifact. On a miss, `build(path)` writes it
+    * and commits last via its own marker (checked by `committed`); THEN superseded
     * same-base siblings are evicted — build-then-evict, because
     * deleting first would race a concurrent session (e.g. Verify and
     * Bench sharing GRAFT_WORK_DIR) mid-`load` on the evicted path. A
@@ -67,7 +50,8 @@ object PipelineQueries {
       committed: String => Boolean)(build: String => Unit)(
       load: String => T): T = {
     val modelsDir = java.nio.file.Paths.get(s"${graft.core.Constants.workDir}/models")
-    val path = s"$modelsDir/${base}_${dirFingerprint(inputFile)}"
+    val fp = scala.util.hashing.MurmurHash3.stringHash(Fixtures.sourceFingerprint(inputFile))
+    val path = s"$modelsDir/${base}_${Integer.toHexString(fp)}"
     def evictSiblings(): Unit =
       if (java.nio.file.Files.isDirectory(modelsDir)) {
         val stream = java.nio.file.Files.list(modelsDir)

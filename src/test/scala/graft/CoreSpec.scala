@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -286,10 +288,59 @@ class CoreSpec extends AnyFunSuite {
   test("bench: committed ladders embed as one line of valid JSON") {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     for (path <- Seq("bench_ladder.json", "bench_pipeline_ladder.json")) {
-      val line = Bench.readLadder(path)
+      val line = Bench.readLadder(path).toString
       assert(!line.contains('\n'), s"$path embeds a newline")
       assert(mapper.readTree(line) === mapper.readTree(new java.io.File(path)), path)
     }
-    assert(Bench.readLadder("no_such_ladder.json") === "null")
+    assert(Bench.readLadder("no_such_ladder.json").isNull)
+
+    // The whole bench record: one line that parses, both ladders embedded
+    // as trees, and a failed entry listed but never timed.
+    val line = Bench.benchLine(
+      Seq("q01_a" -> Some(Seq(2.5, 2.25)), "q02_b" -> None, "q03_c" -> Some(Seq(0.5))),
+      Some((graft.operators.CrawlLoop.RunResult("crawl", 3, 0, 10, 9, 8), 2.0)),
+      "/data/sf0.001", 4,
+      Bench.readLadder("bench_ladder.json"), Bench.readLadder("bench_pipeline_ladder.json"))
+    assert(!line.contains('\n'))
+    val rec = mapper.readTree(line)
+    assert(rec.get("scaling").get("ladder_ref").get("committed") ===
+      mapper.readTree(new java.io.File("bench_ladder.json")))
+    assert(rec.get("scaling").get("ladder_ref").get("committed_pipeline") ===
+      mapper.readTree(new java.io.File("bench_pipeline_ladder.json")))
+    assert(rec.fieldNames.asScala.toSeq === Seq("metric", "value", "unit", "queries",
+      "query_walls", "failed", "sf", "cpus", "crawl", "scaling"))
+    assert(rec.get("failed").elements.asScala.map(_.asText).toSeq === Seq("q02_b"))
+    assert(rec.get("queries").fieldNames.asScala.toSeq === Seq("q01_a", "q03_c", "crawl_e2e"))
+    assert(rec.get("query_walls").fieldNames.asScala.toSeq === Seq("q01_a", "q03_c"))
+    assert(rec.get("queries").get("q01_a").asDouble === 2.25)
+    assert(rec.get("query_walls").get("q01_a").elements.asScala.map(_.asDouble).toSeq ===
+      Seq(2.5, 2.25))
+    assert(rec.get("value").asDouble === 2.25 + 0.5 + 2.0)
+    assert(rec.get("crawl").get("throughput_urls_per_sec").asDouble === 13.5)
+  }
+
+  test("fingerprint: a touched file changes its own and its directory's fingerprint") {
+    import java.nio.file.{Files, attribute}
+    val dir = Files.createTempDirectory("graft-fp-")
+    try {
+      val a = Files.writeString(dir.resolve("a.parquet"), "aa")
+      Files.writeString(dir.resolve("b.parquet"), "b")
+      Files.createDirectory(dir.resolve("sub.parquet")) // not a file: ignored
+      // A flat directory keeps the marker format its caches already store.
+      def entry(n: String) = {
+        val f = dir.resolve(n)
+        s"$n:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
+      }
+      val (fileFp, dirFp) =
+        (Fixtures.sourceFingerprint(a.toString), Fixtures.sourceFingerprint(dir.toString))
+      assert(dirFp === s"${entry("a.parquet")}|${entry("b.parquet")}")
+      assert(fileFp === entry("a.parquet"))
+      Files.setLastModifiedTime(a, attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(a).toMillis + 5000))
+      assert(Fixtures.sourceFingerprint(a.toString) !== fileFp)
+      assert(Fixtures.sourceFingerprint(dir.toString) !== dirFp)
+      intercept[IllegalArgumentException](
+        Fixtures.sourceFingerprint(dir.resolve("sub.parquet").toString))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }
