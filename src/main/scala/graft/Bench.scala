@@ -15,8 +15,8 @@ import graft.operators.CrawlLoop
   * (urls scheduled+fetched+parsed per second) so BENCH_r{N}.json can be
   * graded against BASELINE.md. Fixture generation runs before the clock.
   * The SAME line is also written to SPARK_GRAFT_BENCH_OUT (default
-  * /root/repo/bench_out.json) so downstream parsing never depends on sbt
-  * log prefixes.
+  * `bench_out.json` in the working directory, where the embedded ladders
+  * are read too) so downstream parsing never depends on sbt log prefixes.
   *
   * Scaling evidence (north_rule: N vs 4N executors) is not measured here:
   * the "scaling" key embeds the committed ladders `bench_ladder.json` and
@@ -150,10 +150,14 @@ object Bench {
           Some(if (w1 > 2.0) Seq(w1, once()) else Seq(w1))
         } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None })
       }
+    // The ladders and the default output resolve against one base: the
+    // working directory, i.e. the checkout the bench runs from.
+    val base = java.nio.file.Paths.get("").toAbsolutePath
+    def inBase(name: String) = base.resolve(name).toString
     val line = benchLine(runs, crawl, sfDir, cpus.toInt,
-      readLadder("bench_ladder.json"), readLadder("bench_pipeline_ladder.json"))
+      readLadder(inBase("bench_ladder.json")), readLadder(inBase("bench_pipeline_ladder.json")))
     // File first (driver-parseable regardless of log wrappers), then stdout.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", inBase("bench_out.json"))
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e") }
     println(line)
