@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.core.Fixtures
+import graft.core.{Constants, Fixtures}
 
 /** Optimization-round plan artifacts: dumps `explain("formatted")` for the
-  * selected SparkEntry queries into `plans/r06/<name>_<suffix>.txt` so plan
-  * claims in OPTIMIZATION_r06.md are auditable without running Spark.
+  * selected SparkEntry queries into `<SPARK_GRAFT_PLAN_DIR>/<name>_<suffix>.txt`
+  * (default `<Constants.workDir>/plans`, outside the checkout) so
+  * plan claims are auditable without running Spark. The round-6 dumps that
+  * OPTIMIZATION_r06.md cites are in commit 0a427bc under plans/r06/.
   *
   * Usage: `sbt "runMain graft.PlanDump <regex> <suffix>"` — e.g.
   * `runMain graft.PlanDump "q193_|q189_" before`. Mirrors Bench's session
@@ -36,7 +38,7 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Fixtures.ensure(spark, sfDir)
-    val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r06"))
+    val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", s"${Constants.workDir}/plans"))
     Files.createDirectories(outDir)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => pattern.findFirstIn(name).isDefined }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Canonicalize, Constants, Fixtures}
+import graft.core.{Canonicalize, Constants, Fixtures, Parquet}
 import graft.operators.{Checkpoints, CrawlConfig, CrawlLoop, Scheduler}
 
 /** Regenerates PLANS.md: `explain("formatted")` dumps of the load-bearing
@@ -25,10 +25,10 @@ object Plans {
 
     val sfDir = "/root/testdata/sf0.001"
     val fixDir = Fixtures.ensure(spark, sfDir)
-    val pages = spark.read.parquet(s"$fixDir/pages.parquet")
-    val robots = spark.read.parquet(s"$fixDir/robots.parquet")
-    val weights = spark.read.parquet(s"$fixDir/source_weights.parquet")
-    val budgets = spark.read.parquet(s"$fixDir/budgets.parquet")
+    val pages = Parquet.read(spark, s"$fixDir/pages.parquet")
+    val robots = Parquet.read(spark, s"$fixDir/robots.parquet")
+    val weights = Parquet.read(spark, s"$fixDir/source_weights.parquet")
+    val budgets = Parquet.read(spark, s"$fixDir/budgets.parquet")
 
     def fmt(df: DataFrame): String = {
       val qe = df.queryExecution
@@ -74,7 +74,7 @@ object Plans {
     sb.append(fmt(graft.operators.BloomSeen.tagMaybeSeenBucketed(probeCands, shards)))
     sb.append("```\n\n")
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     sb.append("## 6. Exact cosine near-dup (q34): triangle-tiled block EQUI-join — no BroadcastNestedLoopJoin\n\n```\n")
     sb.append(fmt(graft.ml.Similarity.cosineNearDupPairs(emb, 0.35)))
     sb.append("```\n\n")
@@ -85,7 +85,7 @@ object Plans {
       emb.filter(col("vec_id") % 50 === 0), emb, 5)))
     sb.append("```\n\n")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
     sb.append("## 8. Decontamination (q47): postings equi-join on hashed shingles, eval side pre-collapsed to distinct keys, no forced broadcast\n\n```\n")
     sb.append(fmt(graft.ml.Corpus.decontaminate(docs, col("doc_id") % 37 === 0)))
     sb.append("```\n\n")

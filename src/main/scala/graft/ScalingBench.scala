@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Constants, Fixtures}
+import graft.core.{Constants, Fixtures, Parquet}
 
 /** Replicated-corpus input for scaling-sized index and dedup work. The
   * object keeps its name because perfbench's `index_live` workload calls
@@ -32,7 +32,7 @@ object ScalingBench {
         if (text == null) null
         else text.split(' ').map(_ + "_" + rep).mkString(" ")
       }
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Parquet.read(spark, s"$sfDir/documents.parquet")
         .withColumn("rep", explode(sequence(lit(0), lit(r - 1))))
         .select(
           (col("doc_id") + col("rep").cast("long") * 1000000000L).as("doc_id"),

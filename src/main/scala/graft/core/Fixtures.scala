@@ -78,10 +78,10 @@ object Fixtures {
   }
 
   def pages(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/pages.parquet")
+    Parquet.read(spark, s"${ensure(spark, sfDir)}/pages.parquet")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/$name.parquet")
+    Parquet.read(spark, s"${ensure(spark, sfDir)}/$name.parquet")
 
   /** True iff this scale factor carries the skew fixture (FIXTURES.md B6). */
   def isSkewSf(sfDir: String): Boolean =
@@ -90,8 +90,7 @@ object Fixtures {
   private def generate(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     import spark.implicits._
 
-    val docs = spark.read
-      .parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
       .select($"doc_id".cast("long"), $"text", $"lang", $"source")
 
     // Effective host: uniform source→host mapping, except the sf0.1 skew

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
 import graft.operators.Rounds
 
 /** Corpus-level training-data operations that sit ON TOP of the dedup /
@@ -79,7 +80,7 @@ object Corpus {
       case Some(root) =>
         val path = s"$root/$name"
         df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-        spark.read.parquet(path)
+        Parquet.read(spark, path)
       case None => df.localCheckpoint(true)
     }
     def releaseRound(df: DataFrame, name: String): Unit = checkpointDir match {
@@ -2114,7 +2115,7 @@ object Corpus {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("shard")
       .parquet(s"$path/data")
-    val nDocs = spark.read.parquet(s"$path/data").count() // footer metadata only
+    val nDocs = Parquet.read(spark, s"$path/data").count() // footer metadata only
     Files.writeString(manifest,
       s"""{"num_shards":$numShards,"n_docs":$nDocs}""")
   }
@@ -2125,7 +2126,7 @@ object Corpus {
       path: String): DataFrame = {
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_MANIFEST")),
       s"no committed shard export at $path")
-    spark.read.parquet(s"$path/data")
+    Parquet.read(spark, s"$path/data")
   }
 
   /** Content-novelty curve over crawl time: per time bucket, how many

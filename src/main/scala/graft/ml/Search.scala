@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
+
 /** Ranked keyword retrieval over the document corpus — the "indexing"
   * half of a news-indexing engine: BM25 (Robertson/Spärck Jones; the
   * Okapi formula with the Lucene +1 idf floor so idf stays positive for
@@ -711,13 +713,13 @@ object Search {
     * recompute for a pre-`sum_dl` stats generation. */
   private def writeGlobalsIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, m: Manifest, newSeg: Int): Unit = {
-    val prevStats = spark.read.parquet(s"$path/stats_v${m.v}")
+    val prevStats = Parquet.read(spark, s"$path/stats_v${m.v}")
     if (!prevStats.columns.contains("sum_dl")) {
       writeGlobals(spark, path, m.segs :+ newSeg, m.v + 1); return
     }
     val newDf = readSegs(spark, path, "postings", Seq(newSeg))
       .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    spark.read.parquet(s"$path/dfreq_v${m.v}")
+    Parquet.read(spark, s"$path/dfreq_v${m.v}")
       .unionByName(newDf)
       .groupBy("term").agg(sum("df").as("df"))
       .write.mode("overwrite").parquet(s"$path/dfreq_v${m.v + 1}")
@@ -733,7 +735,7 @@ object Search {
 
   private def readSegs(spark: org.apache.spark.sql.SparkSession, path: String,
       table: String, segs: Seq[Int]): DataFrame =
-    spark.read.parquet(segs.map(k => s"$path/$table/seg=$k"): _*)
+    Parquet.read(spark, segs.map(k => s"$path/$table/seg=$k"): _*)
 
   private case class Manifest(segs: Seq[Int], v: Int, epoch: Long,
       tombs: Seq[Int] = Nil)
@@ -775,7 +777,7 @@ object Search {
   private def readTombs(spark: org.apache.spark.sql.SparkSession,
       path: String, m: Manifest): Option[DataFrame] =
     if (m.tombs.isEmpty) None
-    else Some(spark.read.parquet(m.tombs.map(t => s"$path/tombs/t=$t"): _*)
+    else Some(Parquet.read(spark, m.tombs.map(t => s"$path/tombs/t=$t"): _*)
       .select("doc_id").distinct())
 
   /** Drop tombstoned docs from a doc_id-carrying frame (no-op when the
@@ -854,9 +856,9 @@ object Search {
     val tf = minusTombs(
       readSegs(spark, path, "postings", m.segs).filter(inQuery),
       readTombs(spark, path, m))
-    val df = spark.read.parquet(s"$path/dfreq_v${m.v}").filter(inQuery)
+    val df = Parquet.read(spark, s"$path/dfreq_v${m.v}").filter(inQuery)
     val lens = readSegs(spark, path, "lens", m.segs)
-    val stats = spark.read.parquet(s"$path/stats_v${m.v}")
+    val stats = Parquet.read(spark, s"$path/stats_v${m.v}")
     scoreFrames(tf, df, lens, stats)
       .select(col("doc_id"), round(col("bm25_raw"), 4).as("bm25"))
   }
@@ -1059,7 +1061,7 @@ object Search {
   def prefixSuggestFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, prefix: String, k: Int): DataFrame = {
     val m = readManifest(path)
-    spark.read.parquet(s"$path/dfreq_v${m.v}")
+    Parquet.read(spark, s"$path/dfreq_v${m.v}")
       .filter(col("term").startsWith(prefix))
       .select(col("term"), col("df").cast("long").as("df"))
       .orderBy(col("df").desc, col("term"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
 import graft.functions.expressions.{cosine_sim, dot_product}
 
 /** Similarity search over an embedding column (task brief):
@@ -231,7 +232,7 @@ object Similarity {
 
   /** Load a persisted quantizer (exact float roundtrip through parquet). */
   def loadIvfModel(spark: SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .select(col("cell"), col("centroid"))
       .collect()
       .sortBy(_.getInt(0))
@@ -352,7 +353,7 @@ object Similarity {
 
   /** Load persisted codebooks (exact float roundtrip through parquet). */
   def loadPqModel(spark: SparkSession, path: String): Array[Array[Array[Float]]] =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .select(col("sub"), col("code"), col("centroid"))
       .collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)

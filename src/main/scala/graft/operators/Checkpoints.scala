@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Constants
+import graft.core.{Constants, Parquet}
 
 /** Snapshot-directory checkpoints — SURVEY.md §2 op 5.
   *
@@ -126,7 +126,7 @@ object Checkpoints {
     * remains for resume-time recovery and pre-upgrade state dirs. */
   def batchCounts(spark: SparkSession, dir: String, k: Long): (Long, Long, Long, Long) = {
     import org.apache.spark.sql.functions.sum
-    val flog = spark.read.parquet(s"$dir/fetch_log/b$k")
+    val flog = Parquet.read(spark, s"$dir/fetch_log/b$k")
     def at(r: org.apache.spark.sql.Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     // Backward compat: pre-upgrade fetch_log deltas lack urls_article — the
     // article count is then the (equally tiny) articles delta's row count.
@@ -140,11 +140,11 @@ object Checkpoints {
         // articles delta at all — a missing dir means 0, not a failed resume.
         val artDir = Paths.get(s"$dir/articles/b$k")
         val nArt =
-          if (Files.isDirectory(artDir)) spark.read.parquet(artDir.toString).count()
+          if (Files.isDirectory(artDir)) Parquet.read(spark, artDir.toString).count()
           else 0L
         (at(f, 0), at(f, 1), nArt)
       }
-    val h = spark.read.parquet(s"$dir/host_log/b$k")
+    val h = Parquet.read(spark, s"$dir/host_log/b$k")
       .agg(sum("urls_scheduled"))
       .head()
     (at(h, 0), fetched, parsed, nArticles)
@@ -174,19 +174,19 @@ object Checkpoints {
     (if (compact) df.coalesce(1) else df).write.mode(SaveMode.Overwrite).parquet(path)
 
   def readSnap(spark: SparkSession, dir: String, k: Long, name: String): DataFrame =
-    spark.read.parquet(s"${snapDir(dir, k)}/$name")
+    Parquet.read(spark, s"${snapDir(dir, k)}/$name")
 
   /** The parquet table at `path`, or None when no write of it committed
     * (no `_SUCCESS` marker): absent, torn, or from an older state layout. */
   def readCommitted(spark: SparkSession, path: String): Option[DataFrame] =
-    if (Files.exists(Paths.get(path, "_SUCCESS"))) Some(spark.read.parquet(path)) else None
+    if (Files.exists(Paths.get(path, "_SUCCESS"))) Some(Parquet.read(spark, path)) else None
 
   /** Union of all committed per-batch appends under `dir/<table>/b*`. */
   def readAppends(spark: SparkSession, dir: String, table: String, upTo: Long): DataFrame = {
     val paths = (1L to upTo).map(k => s"$dir/$table/b$k")
       .filter(p => Files.exists(Paths.get(p)))
     require(paths.nonEmpty, s"no committed appends for $table in $dir")
-    spark.read.parquet(paths: _*)
+    Parquet.read(spark, paths: _*)
   }
 
   // ------------------------------------------------------------------
@@ -249,7 +249,7 @@ object Checkpoints {
   def readSeenRecent(spark: SparkSession, dir: String, base: Long,
       upTo: Long): Option[DataFrame] = {
     val paths = deltaPaths(dir, Some(base), upTo)
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(Parquet.read(spark, paths: _*))
   }
 
   /** Effective seen rows up to batch `upTo`: the base compaction
@@ -259,7 +259,7 @@ object Checkpoints {
     val base = seenBase(dir, upTo)
     val paths = base.map(compactDir(dir, _)).toSeq ++ deltaPaths(dir, base, upTo)
     require(paths.nonEmpty, s"no committed appends for seen in $dir")
-    spark.read.parquet(paths: _*)
+    Parquet.read(spark, paths: _*)
   }
 
   /** Fold the effective seen set at batch k into `seen_compact/c<k>`, then

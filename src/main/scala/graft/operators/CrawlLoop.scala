@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Constants, Fixtures}
+import graft.core.{Constants, Fixtures, Parquet}
 
 /** The multi-batch crawl driver with exact resume — SURVEY.md §3 E2 / §2 op 43.
   *
@@ -60,7 +60,7 @@ object CrawlLoop {
   val DistHostRankMaxHosts: Long = 1024L
 
   def seedFrontier(spark: SparkSession, fixDir: String): DataFrame =
-    spark.read.parquet(s"$fixDir/seeds.parquet")
+    Parquet.read(spark, s"$fixDir/seeds.parquet")
       // scheme prefilter keeps the Column flavor in lockstep with
       // Canonicalize.canonicalScala (which returns None for non-http(s)).
       .filter(graft.core.Canonicalize.isHttpScheme(col("url")))
@@ -96,7 +96,7 @@ object CrawlLoop {
     } yield (j, shards)
     base match {
       case Some((j, shards)) =>
-        SeenInputs(spark.read.parquet(Checkpoints.compactDir(dir, j)), shards,
+        SeenInputs(Parquet.read(spark, Checkpoints.compactDir(dir, j)), shards,
           Checkpoints.readSeenRecent(spark, dir, j, upTo), cfg)
       case None =>
         SeenInputs(seenUpTo(spark, dir, upTo), Checkpoints.emptyFrame(spark, ShardSchema),
@@ -117,11 +117,11 @@ object CrawlLoop {
     val dir = Checkpoints.stateDir(cfg.runTag)
     if (fresh) Checkpoints.deleteRecursively(dir)
 
-    val pages0 = spark.read.parquet(s"$fixDir/pages.parquet")
+    val pages0 = Parquet.read(spark, s"$fixDir/pages.parquet")
     val pages = if (cfg.cacheInputs) pages0.cache() else pages0
-    val robots = spark.read.parquet(s"$fixDir/robots.parquet")
-    val weights = spark.read.parquet(s"$fixDir/source_weights.parquet")
-    val budgets = spark.read.parquet(s"$fixDir/budgets.parquet")
+    val robots = Parquet.read(spark, s"$fixDir/robots.parquet")
+    val weights = Parquet.read(spark, s"$fixDir/source_weights.parquet")
+    val budgets = Parquet.read(spark, s"$fixDir/budgets.parquet")
 
     val maxTsSec = pages.agg(max("warc_ts")).head().getTimestamp(0).toInstant.getEpochSecond
 

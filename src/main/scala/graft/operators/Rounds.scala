@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * columns) grows its logical plan MULTIPLICATIVELY per round: at the
   * pinned 3 rounds opicFixed's single unrolled plan was already ~62k
   * explain lines and q193's composition ~189k (the `_before.txt` dumps
-  * under plans/r06/),
+  * under plans/r06/ in commit 0a427bc),
   * and Catalyst analysis/optimization of that tree — not execution —
   * dominated the wall (q189 15 s, q193 113 s at sf0.1 on a 12k-edge
   * graph; task binaries ~1 MB). Checkpointing each round keeps the plan

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Canonicalize, Constants, Fixtures, Parsers}
+import graft.core.{Canonicalize, Constants, Fixtures, Parquet, Parsers}
 import graft.operators.{CrawlConfig, CrawlLoop, Recrawl, Robots, Scheduler}
 
 /** Crawl-engine query entries for SparkEntry — SURVEY.md §2 ops 1–51.
@@ -139,7 +139,7 @@ object CrawlQueries {
     * (canonicalization fodder), plus one ORPHAN urlset per host that no
     * index references and must be excluded. */
   private def sitemapFixture(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = Parquet.read(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         concat(col("source"), lit(".example.com")).as("host"),
         concat(lit("https://"), col("source"), lit(".example.com")).as("base"))
@@ -185,7 +185,7 @@ object CrawlQueries {
     * plus a 2-cycle (`/a/`↔`/b/`) and a self-loop (`/self/`) that must
     * come out 'unresolved'. */
   private def redirectEdges(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = Parquet.read(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         concat(lit("https://"), col("source"), lit(".example.com")).as("base"))
     val m = col("doc_id") % 17
@@ -491,7 +491,7 @@ object CrawlQueries {
     // derive-in-query pattern) fold onto their origin article; everything
     // else onto its op-7 canonical form.
     "q179_canonical_collapse" -> ((s, dir) => {
-      val synd = s.read.parquet(s"$dir/documents.parquet")
+      val synd = Parquet.read(s, s"$dir/documents.parquet")
         .filter(col("doc_id") % 13 === 5)
         .select(
           concat(lit("https://syndication.example.net/s/"), col("doc_id")).as("url"),
@@ -706,7 +706,7 @@ object CrawlQueries {
       val bumped = parsed.select(col("url"),
         when(pmod(docId, lit(9)) === 2, col("lastmod") + expr("INTERVAL 3 DAYS"))
           .otherwise(col("lastmod")).as("lastmod"))
-      val extra = s.read.parquet(s"$dir/documents.parquet")
+      val extra = Parquet.read(s, s"$dir/documents.parquet")
         .filter(col("doc_id") % 10 === 4)
         .select(
           concat(lit("https://"), col("source"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fixtures
+import graft.core.{Fixtures, Parquet}
 import graft.functions.expressions.rolling_hash
 import graft.ml.{Corpus, Dedup, Multimodal, Search, Similarity, TextAnalysis}
 
@@ -15,9 +15,9 @@ import graft.ml.{Corpus, Dedup, Multimodal, Search, Similarity, TextAnalysis}
 object PipelineQueries {
 
   private[queries] def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Parquet.read(s, s"$dir/embeddings.parquet")
 
   /** ONE cached exact ngram-Jaccard pair relation per (session, sf,
     * threshold) per JVM: q33/q46/q88/q99/q101 all compose over the same

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
+
 /** Generic relational operators over the TPC-H-ish testdata — SURVEY.md §5.7:
   * cheap DuckDB-oracle coverage of joins / aggregations / windows / set ops /
   * rollup / JSON / event-time buckets that the crawl tables exercise less
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
 object RelationalQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(s, s"$dir/$name.parquet")
 
   val entries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // map ops (SURVEY §2 op 40): JSON props → MapType, element_at /

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.{Constants, Fixtures, SessionConf}
+import graft.core.{Constants, Fixtures, Parquet, SessionConf}
 import graft.streaming.StreamingIngest
 
 /** Driver-gated entries for the Structured Streaming flavors (SURVEY.md §2
@@ -223,7 +223,7 @@ object StreamingQueries {
           .liveAlertStream(docsFeed(s, dir, "livealert"), alerts, out).start()
         try q.processAllAvailable() finally q.stop()
       }
-      s.read.parquet(out).select(col("alert_id"), col("doc_id"))
+      Parquet.read(s, out).select(col("alert_id"), col("doc_id"))
     }),
 
     // streaming per-host rate limiter, driver-gated — and fully

@@ -103,6 +103,23 @@ class CheckpointCompatSpec extends AnyFunSuite {
     }
   }
 
+  test("readSeen and readSnap open their tables without a Spark job") {
+    val dir = Files.createTempDirectory("graft-read-jobs").toString
+    for (k <- 1L to 3L)
+      Seq((k, s"https://h.example.com/$k", "fetched")).toDF("url_hash", "url", "status")
+        .write.parquet(s"$dir/seen/b$k")
+    Checkpoints.readSeen(spark, dir, 2L).write.parquet(Checkpoints.compactDir(dir, 2L))
+    Seq(("https://h.example.com/4", "h.example.com")).toDF("url", "host")
+      .write.parquet(s"${Checkpoints.snapDir(dir, 3L)}/frontier")
+    val (seen, seenJobs) = org.apache.spark.graft.JobCount(spark)(Checkpoints.readSeen(spark, dir, 3L))
+    val (snap, snapJobs) = org.apache.spark.graft.JobCount(spark)(
+      Checkpoints.readSnap(spark, dir, 3L, "frontier"))
+    assert((seenJobs, snapJobs) === ((0, 0)))
+    // compaction c2 (b1, b2) plus the delta b3
+    assert(seen.select("url_hash").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(snap.columns.toSeq === Seq("url", "host") && snap.count() === 1L)
+  }
+
   test("compactSeen releases old shard tables and torn compactions, committed or not") {
     val dir = Files.createTempDirectory("graft-compact-gc").toString
     for (k <- 1L to 4L)

@@ -343,4 +343,48 @@ class CoreSpec extends AnyFunSuite {
         Fixtures.sourceFingerprint(dir.resolve("sub.parquet").toString))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
+
+  test("Parquet.read: Spark's inferred schema, read from one footer with no job") {
+    import java.nio.file.Files
+    import org.apache.spark.graft.JobCount
+    def same(paths: String*): Unit = {
+      val (want, sparkJobs) = JobCount(spark)(spark.read.parquet(paths: _*).schema)
+      val (got, jobs) = JobCount(spark)(Parquet.read(spark, paths: _*).schema)
+      assert((sparkJobs, jobs) === ((1, 0)), paths)
+      assert(got === want, paths)
+    }
+    val tables = new java.io.File(TestSpark.Sf0001).listFiles.map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted
+    assert(tables.length === 10)
+    tables.foreach(same(_))
+    val dir = Files.createTempDirectory("graft-pq-")
+    try {
+      val rich = s"$dir/rich"
+      Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Seq("a", "b"), ("x", 2.5)))
+        .toDF("id", "ts", "tags", "pair").write.parquet(rich)
+      same(rich)
+      // An empty write still leaves one part file carrying the schema.
+      val empty = s"$dir/empty"
+      Seq.empty[(Int, String)].toDF("n", "s").write.parquet(empty)
+      same(empty)
+      // Over several paths Spark takes the first data file by full path:
+      // here empty's, whose schema differs from rich's.
+      same(rich, empty)
+      assert(Parquet.read(spark, rich, empty).columns.toSeq === Seq("n", "s"))
+      // Where Spark decides itself, the helper defers to it.
+      assert(Parquet.schema(spark, Seq(s"$dir/ric*")).isEmpty)
+      val parted = s"$dir/parted"
+      Seq((1, "a")).toDF("n", "p").write.partitionBy("p").parquet(parted)
+      assert(Parquet.schema(spark, Seq(parted)).isEmpty)
+      assert(Parquet.read(spark, parted).columns.toSeq === Seq("n", "p"))
+      SessionConf.withConf(spark, "spark.sql.parquet.mergeSchema", "true") {
+        assert(Parquet.schema(spark, Seq(rich)).isEmpty)
+      }
+      val bare = Files.createDirectory(dir.resolve("bare")).toString
+      for (p <- Seq(s"$dir/missing", bare)) {
+        val want = intercept[Exception](spark.read.parquet(p)).getClass
+        assert(intercept[Exception](Parquet.read(spark, p)).getClass === want, p)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

@@ -246,6 +246,23 @@ class SearchSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toMap)
   }
 
+  test("index readers open every table without a Spark job") {
+    // Two segments, a dfreq/stats generation and a tombstone set: every
+    // table a query reads. Their answers are pinned by the tests above.
+    val dir = java.nio.file.Files.createTempDirectory("idxjobs").toString + "/idx"
+    Search.saveIndex(corpus.filter($"doc_id" <= 3), dir)
+    Search.updateIndex(spark, dir, corpus.filter($"doc_id" > 3))
+    Search.deleteDocs(spark, dir, Seq(5L).toDF("doc_id"))
+    val q = Seq("spark", "merge", "vector")
+    val builds = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "bm25" -> (() => Search.bm25ScoresFromIndex(spark, dir, q)),
+      "phrase" -> (() => Search.phraseDocsFromIndex(spark, dir, "spark merge")),
+      "boolean" -> (() => Search.booleanDocsFromIndex(spark, dir, Seq("spark"), Seq("row"))),
+      "prefix" -> (() => Search.prefixSuggestFromIndex(spark, dir, "s", 10)))
+    for ((name, build) <- builds)
+      assert(org.apache.spark.graft.JobCount(spark)(build())._2 === 0, name)
+  }
+
   test("deleteDocs: tombstones survive an append; delete-then-update ordering") {
     val q = Seq("spark", "merge", "vector")
     val dir = java.nio.file.Files.createTempDirectory("bm25del2").toString + "/idx"
